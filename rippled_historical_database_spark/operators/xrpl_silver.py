@@ -673,6 +673,13 @@ def xrpl_payments(txs: DataFrame, balance_changes: DataFrame, nodes: DataFrame) 
     )
 
 
+def _utf8(payload: Column) -> Column:
+    """Binary -> string the way Node's ``Buffer#toString('utf8')`` does:
+    each invalid UTF-8 sequence becomes U+FFFD instead of raising, so
+    one undecodable memo cannot fail the whole memos table."""
+    return F.make_valid_utf8(payload.cast("string"))
+
+
 def _decode(raw: Column) -> tuple[Column, Column]:
     """(decoded, encoding) for a memo field: hex -> utf8, else base64 ->
     utf8, else null (memos.js:27-40)."""
@@ -680,8 +687,8 @@ def _decode(raw: Column) -> tuple[Column, Column]:
     b64 = raw.rlike(B64_RE)
     stripped = F.regexp_replace(raw, r"^0x", "")
     decoded = (
-        F.when(hexed, F.decode(F.unhex(stripped), "UTF-8"))
-        .when(b64, F.decode(F.unbase64(raw), "UTF-8"))
+        F.when(hexed, _utf8(F.unhex(stripped)))
+        .when(b64, _utf8(F.unbase64(raw)))
     )
     encoding = F.when(hexed, "hex").when(b64, "base64")
     return decoded, encoding

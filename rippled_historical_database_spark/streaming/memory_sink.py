@@ -12,26 +12,11 @@ longer outlives the call.
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame
 
 from ..functions.localrel import local_df
-
-# State-store parallelism override for FEW-KEY stateful twins (the
-# per-pair indicator streams: ~4 keys).  A stateful query creates (and
-# commits, every micro-batch) one state-store partition per shuffle
-# partition, so at 4 keys the session default of 32 mostly schedules
-# empty-store commits (~2.5-3 s/batch vs ~0.9 s at 8 -- SCALE.md
-# round-12 note).  Key-HEAVY twins (the account-bucket and pHash
-# registries: 10k-160k keys) must NOT be narrowed: the per-key Python
-# work is the cost there and 8 partitions starve the 32 cores
-# (measured at the 10x corpus: 86.5 s at 8 vs 38.9 s at 32).  Callers
-# therefore opt in per stream; default = leave the session setting.
-FEW_KEY_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
 
 
 def run_to_memory(
@@ -46,9 +31,9 @@ def run_to_memory(
 
     ``state_partitions`` (optional) scopes
     ``spark.sql.shuffle.partitions`` for the stream's lifetime (a
-    streaming query pins its state partitioning at start) -- pass
-    FEW_KEY_STATE_PARTITIONS for per-pair twins, leave None for
-    key-heavy state.
+    streaming query pins its state partitioning at start) -- the
+    few-key indicator twins pass rsi_stream.STATE_PARTITIONS; leave
+    None for key-heavy state.
     """
     spark = df.sparkSession
     name = f"{base_name}_{uuid.uuid4().hex[:12]}"

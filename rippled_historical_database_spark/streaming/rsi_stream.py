@@ -1,8 +1,10 @@
-"""Wilder's-EMA RSI as a custom stateful streaming operator.
+"""Streaming indicator twins: one spec record per twin, one runner.
 
-Wilder's smoothing (avg_t = (avg_{t-1} * (N-1) + x_t) / N, seeded by
-the SMA of the first N deltas) is a linear RECURSION over the close
-series -- the same class as the reference's running averages
+A twin is the streaming copy of a batch indicator (Wilder's RSI, ATR,
+MACD, Bollinger, ...), checked against the SAME DuckDB oracle as its
+batch form.  Wilder's smoothing (avg_t = (avg_{t-1} * (N-1) + x_t) / N,
+seeded by the SMA of the first N deltas) is a linear RECURSION over the
+close series -- the same class as the reference's running averages
 (``lib/aggregation/stats.js:327-331``), which mutate one accumulator
 per key as rows arrive.  A window frame cannot express it (each output
 depends on the previous OUTPUT, not a previous input slice), so the
@@ -12,93 +14,126 @@ canonical streaming form is arbitrary per-key state:
       -> GroupState keyed by pair
   * one candle-close per micro-batch step -> state transition + emit
 
-Determinism: the state transition applies EXACTLY the arithmetic of the
-batch fold in ``operators/candles.py`` (IEEE double ops in the same
-order, every intermediate average fround-ed at ``DD_ROUND``), so
-streamed == batch == the DuckDB recursive-CTE oracle row-for-row; the
-equality is asserted in tests/test_rsi_wilder.py and the registered
-oracle is the same SQL as the batch query's.
+Shape: every twin is one ``Twin`` record -- registry metadata, the
+batch feed it replays, the key, the order, output/state DDL, the
+initial state and a PURE per-bar ``step(state, bar) -> (state, rows)``
+-- and ``_run`` is the one runner that slices, streams, folds and
+drains it (the one-contract, many-functions shape of
+``GroupedData.applyInPandas``).  Only the per-bar arithmetic differs
+between twins.
 
-Order: RSI is order-sensitive, so the harness feeds the close series
-as one file per time-slice, sliced ON bucket boundaries and streamed
-oldest-first with maxFilesPerTrigger=1; within a batch the updater
-sorts by bucket.  In production the upstream is the hourly candle
-stream (stream_candles_hourly) whose watermark already bounds
-out-of-orderness to the late-data window.
+Determinism: each step applies EXACTLY the arithmetic of the batch
+fold in ``operators/candles.py`` (IEEE double ops in the same order,
+every intermediate average fround-ed at ``DD_ROUND``), so streamed ==
+batch == the DuckDB oracle row-for-row; the equality is asserted in
+tests/test_rsi_wilder.py and the registered oracle is the same SQL as
+the batch query's.
 
-Scale: state is ~6 doubles per pair -- bounded by the number of live
-trading pairs, not by history -- and the shuffle partitions by pair, so
-a 100 TB replay streams through constant state per key.
+Order: the indicators are order-sensitive, so the runner feeds each
+series as one file per time-slice, sliced ON ``order`` boundaries and
+streamed oldest-first with maxFilesPerTrigger=1; within a batch the
+updater sorts by the same ``order``.  In production the upstream is
+the hourly candle stream (stream_candles_hourly) whose watermark
+already bounds out-of-orderness to the late-data window.
+
+Scale: state is a few scalars (or a bounded ring) per pair -- bounded
+by the number of live trading pairs, not by history -- and the shuffle
+partitions by pair, so a 100 TB replay streams through constant state
+per key.
 """
 
 from __future__ import annotations
 
-import atexit
+import bisect
+import datetime as dt
 import math
 import os
 import shutil
 import tempfile
 import time
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
+from dataclasses import dataclass
 from decimal import ROUND_HALF_UP, Decimal
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.window import Window
 
+from ..operators.anomaly import (
+    BASELINE_HOURS,
+    CUSUM_H,
+    CUSUM_K,
+    SQL_CUSUM,
+    SQL_ROLLING_ZSCORE,
+    Z_THRESHOLD,
+    _cusum_z,
+    hourly_event_series,
+)
 from ..operators.candles import (
+    _DB_T_MICRO,
+    ATR_N,
+    BB_K,
+    BB_N,
+    DC_N,
     DD_ROUND,
+    ICHI_K,
+    ICHI_S,
+    ICHI_T,
+    KC_ATR_N,
+    KC_K,
+    KC_N,
+    MACD_FAST,
+    MACD_SIG,
+    MACD_SLOW,
     RSI_N,
+    SQL_ATR,
     SQL_BOLLINGER,
-    SQL_KELTNER,
-    SQL_MACD,
     SQL_DOLLAR_BARS,
     SQL_DONCHIAN,
     SQL_GAP_INTERPOLATION,
+    SQL_HEIKIN_ASHI,
+    SQL_ICHIMOKU,
+    SQL_KELTNER,
+    SQL_MACD,
     SQL_MAX_DRAWDOWN,
     SQL_OBV,
     SQL_RSI_CUTLER,
     SQL_STOCHASTIC,
-    SQL_ATR,
-    SQL_ICHIMOKU,
     SQL_WILDER_RSI,
+    STOCH_D,
+    STOCH_N,
     _hourly_closes,
+    _hourly_ohlc,
+    _hourly_ohlc4,
+    _with_legs,
+    fround,
     rsi_from_avgs,
 )
-from ..operators.anomaly import SQL_CUSUM, SQL_ROLLING_ZSCORE
 from ..plans.registry import register
-from .memory_sink import FEW_KEY_STATE_PARTITIONS, run_to_memory
+from ..sources.catalog import load_table
+from .memory_sink import run_to_memory
 
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("pair", StringType()),
-        StructField("bucket", TimestampType()),
-        StructField("ag", DoubleType()),
-        StructField("al", DoubleType()),
-    ]
-)
+# A step folds one bar into the state and returns the rows it emits
+# (output columns after the key); see Twin.
+Step = Callable[[tuple, Any], tuple[tuple, Iterable[tuple]]]
 
-STATE_SCHEMA = StructType(
-    [
-        StructField("prev_close", DoubleType()),
-        StructField("n", LongType()),
-        StructField("sg", DoubleType()),
-        StructField("sl", DoubleType()),
-        StructField("ag", DoubleType()),
-        StructField("al", DoubleType()),
-    ]
-)
+# The replay: every twin's feed is cut into N_SLICES ordered files and
+# streamed one file per micro-batch, so state really carries across
+# batches.
+N_SLICES = 4
+
+# State-store parallelism for the twins.  A stateful query creates (and
+# commits, every micro-batch) one state-store partition per shuffle
+# partition, so at the twins' ~4 keys the session default of 32 mostly
+# schedules empty-store commits (~2.5-3 s/batch vs ~0.9 s at 8 --
+# SCALE.md round-12 note).  Key-HEAVY streams (the account-bucket and
+# pHash registries: 10k-160k keys) must NOT be narrowed: the per-key
+# Python work is the cost there and 8 partitions starve the 32 cores
+# (measured at the 10x corpus: 86.5 s at 8 vs 38.9 s at 32), so they
+# keep the session setting and do not use this runner.
+STATE_PARTITIONS = 8
 
 _QUANT = Decimal(1).scaleb(-DD_ROUND)  # decimal-CAST mirror (_dquant)
 _FR_M = float(10**DD_ROUND)
@@ -122,87 +157,95 @@ def _r6(x: float) -> float:
     return math.floor(x * 1e6 + 0.5) / 1e6
 
 
-def _update_rsi(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    (pair,) = key
-    if state.exists:
-        prev_close, n, sg, sl, ag, al = state.get
-    else:
-        prev_close, n, sg, sl, ag, al = None, 0, 0.0, 0.0, None, None
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
-    out_bucket, out_ag, out_al = [], [], []
-    for bucket, close in zip(rows["bucket"], rows["close"]):
-        close = float(close)
-        if prev_close is None:
-            prev_close = close
-            continue
-        d = _rhalf(close - prev_close)
-        prev_close = close
-        gain, loss = max(d, 0.0), max(-d, 0.0)
-        if n < RSI_N - 1:
-            n, sg, sl = n + 1, sg + gain, sl + loss
-            continue
-        if n == RSI_N - 1:
-            ag = _rhalf((sg + gain) / RSI_N)
-            al = _rhalf((sl + loss) / RSI_N)
-            sg = sl = 0.0
-        else:
-            ag = _rhalf((ag * (RSI_N - 1) + gain) / RSI_N)
-            al = _rhalf((al * (RSI_N - 1) + loss) / RSI_N)
-        n += 1
-        out_bucket.append(bucket)
-        out_ag.append(ag)
-        out_al.append(al)
-
-    state.update((prev_close, n, sg, sl, ag, al))
-    yield pd.DataFrame(
-        {
-            "pair": [pair] * len(out_bucket),
-            "bucket": out_bucket,
-            "ag": out_ag,
-            "al": out_al,
-        }
-    )
+def _dquant(x: float) -> Decimal:
+    """Spark's CAST(double AS DECIMAL(38, DD_ROUND)) in Python: shortest
+    decimal repr (java Double.toString == Python repr digits), then
+    HALF_UP at the scale.  Exact for already-rounded closes; matches
+    the batch's windowed-DECIMAL-sum terms for c*c."""
+    return Decimal(repr(x)).quantize(_QUANT, rounding=ROUND_HALF_UP)
 
 
-def rsi_stream(closes: DataFrame) -> DataFrame:
-    """The stateful plan: streaming (pair, bucket, close) rows ->
-    per-bucket Wilder gain/loss averages.  ``closes`` must be a
-    streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return closes.groupBy("pair").applyInPandasWithState(
-        _update_rsi,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+_QUANT6 = Decimal(1).scaleb(-6)
 
 
-def _write_ordered_slices(
-    closes: DataFrame, n_slices: int = 4, order_col="bucket"
-) -> str:
-    """Materialize a batch close series as one parquet file per
-    contiguous bucket range, mtime-ordered oldest-first, so the file
-    source replays the series chronologically (RSI is order-sensitive;
+def _d6(x: float) -> Decimal:
+    """Spark's CAST(double AS DECIMAL(38,6)): shortest repr, HALF_UP."""
+    return Decimal(repr(x)).quantize(_QUANT6, rounding=ROUND_HALF_UP)
+
+
+# ------------------------------------------------------------ the record
+
+
+@dataclass(frozen=True)
+class Twin:
+    """One streaming indicator twin.
+
+    ``feed(spark, sf_dir)`` builds the batch series the runner replays;
+    ``order`` is both the slice order and the in-batch sort (it must be
+    a TOTAL order per key).  ``output``/``state`` are DDL strings; the
+    output's first column receives the grouping ``key``.  ``step`` is
+    pure: it folds one bar (a row namedtuple) into the state tuple and
+    returns the new state plus the rows that bar emits.  Update-mode
+    twins also set ``revise``: the running answer re-emitted from the
+    state at the end of every micro-batch.  ``finish`` shapes the
+    drained relation into the registered result."""
+
+    name: str
+    rotation_group: int
+    oracle: str
+    doc: str
+    tags: tuple[str, ...]
+    feed: Callable[[SparkSession, str], DataFrame]
+    output: str
+    state: str
+    init: tuple
+    step: Step
+    finish: Callable[[DataFrame], DataFrame]
+    key: str = "pair"
+    order: tuple[str, ...] = ("bucket",)
+    revise: Callable[[tuple], Iterable[tuple]] | None = None
+
+    @property
+    def mode(self) -> str:
+        return "append" if self.revise is None else "update"
+
+    def update(
+        self, key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
+    ) -> Iterator[pd.DataFrame]:
+        """The (key, pdfs, state) callable of the stateful plan: fold
+        ``step`` over one key's micro-batch in ``order``, carrying the
+        GroupState."""
+        s = state.get if state.exists else self.init
+        bars = pd.concat(list(pdfs), ignore_index=True).sort_values(
+            list(self.order)
+        )
+        out: list[tuple] = []
+        for bar in bars.itertuples(index=False):
+            s, rows = self.step(s, bar)
+            out.extend(rows)
+        if self.revise is not None:
+            out.extend(self.revise(s))
+        state.update(s)
+        columns = [c.split()[0] for c in self.output.split(",")]
+        yield pd.DataFrame([(*key, *r) for r in out], columns=columns)
+
+
+# ------------------------------------------------------------ the runner
+
+
+def _write_ordered_slices(feed: DataFrame, order: tuple[str, ...]) -> str:
+    """Materialize a batch series as one parquet file per contiguous
+    ``order`` range, mtime-ordered oldest-first, so the file source
+    replays the series chronologically (the twins are order-sensitive;
     slicing on bucket boundaries keeps every hour whole).
 
-    ``order_col`` may be a list forming a TOTAL order: when the lead
-    column has ties (the 10x clone corpus repeats every trade ts 10
-    times), an ntile over the lead column alone cuts tie groups
-    ARBITRARILY across slices, and a later-tiebreak row landing in an
-    earlier slice reaches the stateful updater out of order."""
-    from pyspark.sql.window import Window
-
+    ``order`` must form a TOTAL order: when the lead column has ties
+    (the 10x clone corpus repeats every trade ts 10 times), an ntile
+    over the lead column alone cuts tie groups ARBITRARILY across
+    slices, and a later-tiebreak row landing in an earlier slice
+    reaches the stateful updater out of order.  The caller owns (and
+    removes) the returned directory."""
     stream_dir = tempfile.mkdtemp(prefix="rsi_closes_")
-    # The file source reads these lazily until run_to_memory drains the
-    # query, so the directory must outlive this function; reclaim it at
-    # interpreter exit instead of leaking one tree per streaming run.
-    atexit.register(shutil.rmtree, stream_dir, ignore_errors=True)
-    order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
     # ONE job writes all slices (r14): the r12 form persisted the sliced
     # relation and ran one filter+coalesce+write job per slice -- 5 job
     # round-trips and 4 cache scans per twin, times ~20 twins.  The
@@ -213,19 +256,19 @@ def _write_ordered_slices(
     # no extra sort is inserted.
     build = os.path.join(stream_dir, "_build")
     (
-        closes.withColumn(
+        feed.withColumn(
             "slice",
-            F.ntile(n_slices).over(Window.orderBy(*order_cols)),
+            F.ntile(N_SLICES).over(Window.orderBy(*order)),
         )
         .coalesce(1)
-        .sortWithinPartitions("slice", *order_cols)
+        .sortWithinPartitions("slice", *order)
         .write.mode("overwrite")
         .partitionBy("slice")
         .parquet(build)
     )
-    for i in range(1, n_slices + 1):
+    for i in range(1, N_SLICES + 1):
         part_dir = os.path.join(build, f"slice={i}")
-        if not os.path.isdir(part_dir):  # < n_slices rows: slice empty
+        if not os.path.isdir(part_dir):  # < N_SLICES rows: slice empty
             continue
         (part,) = [
             f for f in os.listdir(part_dir)
@@ -240,8 +283,86 @@ def _write_ordered_slices(
     return stream_dir
 
 
-@register(
-    "stream_rsi_wilder",
+def _run(twin: Twin, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Replay ``twin.feed`` slice by slice through the stateful plan,
+    drain it, and shape the drained relation with ``twin.finish``."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    feed = twin.feed(spark, sf_dir)
+    stream_dir = _write_ordered_slices(feed, twin.order)
+    try:
+        bars = (
+            spark.readStream.schema(feed.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stream_dir)
+        )
+        stateful = bars.groupBy(twin.key).applyInPandasWithState(
+            twin.update,
+            outputStructType=twin.output,
+            stateStructType=twin.state,
+            outputMode=twin.mode,
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        # The drain is a driver-local relation, so nothing reads the
+        # slices once it returns: reclaim them now, not at exit.
+        drained = run_to_memory(
+            stateful, twin.name, twin.mode, state_partitions=STATE_PARTITIONS
+        )
+    finally:
+        shutil.rmtree(stream_dir, ignore_errors=True)
+    return twin.finish(drained)
+
+
+# Every registered twin by name (the split-invariance test walks it).
+TWINS: dict[str, Twin] = {}
+
+
+def _twin(twin: Twin) -> Callable[[SparkSession, str], DataFrame]:
+    """Register ``twin`` as a registry query; return the query."""
+
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return _run(twin, spark, sf_dir)
+
+    query.__name__ = query.__qualname__ = twin.name
+    TWINS[twin.name] = twin
+    return register(
+        twin.name,
+        oracle=twin.oracle,
+        doc=twin.doc,
+        tags=twin.tags,
+        rotation_group=twin.rotation_group,
+    )(query)
+
+
+def _by(*cols: str) -> Callable[[DataFrame], DataFrame]:
+    """finish: order the drained rows, nothing else."""
+    return lambda drained: drained.orderBy(*cols)
+
+
+# ------------------------------------------------ Wilder's-EMA RSI
+
+
+def _rsi_step(s: tuple, bar: Any) -> tuple[tuple, Iterable[tuple]]:
+    prev_close, n, sg, sl, ag, al = s
+    close = float(bar.close)
+    if prev_close is None:
+        return (close, n, sg, sl, ag, al), ()
+    d = _rhalf(close - prev_close)
+    gain, loss = max(d, 0.0), max(-d, 0.0)
+    if n < RSI_N - 1:
+        return (close, n + 1, sg + gain, sl + loss, ag, al), ()
+    if n == RSI_N - 1:
+        ag = _rhalf((sg + gain) / RSI_N)
+        al = _rhalf((sl + loss) / RSI_N)
+        sg = sl = 0.0
+    else:
+        ag = _rhalf((ag * (RSI_N - 1) + gain) / RSI_N)
+        al = _rhalf((al * (RSI_N - 1) + loss) / RSI_N)
+    return (close, n + 1, sg, sl, ag, al), ((bar.bucket, ag, al),)
+
+
+stream_rsi_wilder = _twin(Twin(
+    name="stream_rsi_wilder",
     rotation_group=7,
     oracle=SQL_WILDER_RSI,
     doc="Wilder's-EMA RSI as per-pair applyInPandasWithState: the "
@@ -256,82 +377,39 @@ def _write_ordered_slices(
         "associative).  Reference analog: the running-average "
         "accumulators of lib/aggregation/stats.js:327-331.",
     tags=("streaming", "stateful", "window"),
-)
-def stream_rsi_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream_dir = _write_ordered_slices(_hourly_closes(spark, sf_dir))
-    closes = (
-        spark.readStream.schema(
-            "pair string, bucket timestamp, close double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    avgs = run_to_memory(rsi_stream(closes), "stream_rsi_wilder", "append", state_partitions=FEW_KEY_STATE_PARTITIONS)
-    return rsi_from_avgs(avgs)
+    feed=_hourly_closes,
+    output="pair string, bucket timestamp, ag double, al double",
+    state="prev_close double, n bigint, sg double, sl double, "
+          "ag double, al double",
+    init=(None, 0, 0.0, 0.0, None, None),
+    step=_rsi_step,
+    finish=rsi_from_avgs,
+))
 
 
 # -------------------------------------------- streaming gap detection
 
-GAP_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("pair", StringType()),
-        StructField("gap_start", TimestampType()),
-        StructField("gap_end", TimestampType()),
-        StructField("n_missing", LongType()),
-    ]
-)
-
-GAP_STATE_SCHEMA = StructType([StructField("last_bucket", TimestampType())])
-
 _HOUR_S = 3600
 
 
-def _update_gaps(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    import datetime as dt
-
-    (pair,) = key
-    last = state.get[0] if state.exists else None
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
-    starts, ends, counts = [], [], []
-    for bucket in rows["bucket"]:
-        bucket = bucket.to_pydatetime() if hasattr(bucket, "to_pydatetime") else bucket
-        if last is not None:
-            missing = int((bucket - last).total_seconds()) // _HOUR_S - 1
-            if missing > 0:
-                starts.append(last + dt.timedelta(hours=1))
-                ends.append(bucket - dt.timedelta(hours=1))
-                counts.append(missing)
-        last = bucket
-    state.update((last,))
-    yield pd.DataFrame(
-        {
-            "pair": [pair] * len(starts),
-            "gap_start": starts,
-            "gap_end": ends,
-            "n_missing": counts,
-        }
-    )
+def _hourly_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _hourly_closes(spark, sf_dir).select("pair", "bucket").distinct()
 
 
-def gap_stream(buckets: DataFrame) -> DataFrame:
-    """Streaming candle-continuity monitor: per-pair state is ONE
-    timestamp (the last seen bucket); each arriving bucket either
-    extends the sequence or emits the completed outage run."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return buckets.groupBy("pair").applyInPandasWithState(
-        _update_gaps,
-        outputStructType=GAP_OUTPUT_SCHEMA,
-        stateStructType=GAP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+def _gap_step(s: tuple, bar: Any) -> tuple[tuple, Iterable[tuple]]:
+    (last,) = s
+    bucket = bar.bucket
+    bucket = bucket.to_pydatetime() if hasattr(bucket, "to_pydatetime") else bucket
+    if last is not None:
+        missing = int((bucket - last).total_seconds()) // _HOUR_S - 1
+        if missing > 0:
+            gap = (last + dt.timedelta(hours=1), bucket - dt.timedelta(hours=1))
+            return (bucket,), ((*gap, missing),)
+    return (bucket,), ()
 
 
-@register(
-    "stream_candle_gap_alerts",
+stream_candle_gap_alerts = _twin(Twin(
+    name="stream_candle_gap_alerts",
     rotation_group=7,
     oracle="""
     WITH b AS (
@@ -373,104 +451,42 @@ def gap_stream(buckets: DataFrame) -> DataFrame:
         "continuity monitoring; no watermark needed because the "
         "upstream candle stream already closes buckets in order.",
     tags=("streaming", "stateful"),
-)
-def stream_candle_gap_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    buckets = _hourly_closes(spark, sf_dir).select("pair", "bucket").distinct()
-    stream_dir = _write_ordered_slices(buckets.withColumn("close", F.lit(0.0)))
-    src = (
-        spark.readStream.schema("pair string, bucket timestamp, close double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-        .select("pair", "bucket")
-    )
-    return run_to_memory(
-        gap_stream(src), "stream_gap_alerts", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "gap_start")
+    feed=_hourly_buckets,
+    output="pair string, gap_start timestamp, gap_end timestamp, "
+           "n_missing bigint",
+    state="last_bucket timestamp",
+    init=(None,),
+    step=_gap_step,
+    finish=_by("pair", "gap_start"),
+))
 
 
 # ----------------------------------------------- streaming ATR (Wilder)
 
-ATR_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("pair", StringType()),
-        StructField("bucket", TimestampType()),
-        StructField("atr", DoubleType()),
-    ]
-)
 
-ATR_STATE_SCHEMA = StructType(
-    [
-        StructField("prev_close", DoubleType()),
-        StructField("n", LongType()),
-        StructField("s", DoubleType()),
-        StructField("atr", DoubleType()),
-    ]
-)
-
-
-def _update_atr(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import ATR_N
-
-    (pair,) = key
-    if state.exists:
-        prev_close, n, s, atr = state.get
+def _atr_step(s: tuple, bar: Any) -> tuple[tuple, Iterable[tuple]]:
+    prev_close, n, acc, atr = s
+    high, low, close = float(bar.high), float(bar.low), float(bar.close)
+    # the SAME float sequence as the batch TR projection: plain
+    # IEEE subtractions/abs/max, then one HALF_UP round at DD_ROUND
+    if prev_close is None:
+        tr = _rhalf(high - low)
     else:
-        prev_close, n, s, atr = None, 0, 0.0, None
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
-    out_bucket, out_atr = [], []
-    for bucket, high, low, close in zip(
-        rows["bucket"], rows["high"], rows["low"], rows["close"]
-    ):
-        high, low, close = float(high), float(low), float(close)
-        # the SAME float sequence as the batch TR projection: plain
-        # IEEE subtractions/abs/max, then one HALF_UP round at DD_ROUND
-        if prev_close is None:
-            tr = _rhalf(high - low)
-        else:
-            tr = _rhalf(
-                max(high - low, abs(high - prev_close), abs(low - prev_close))
-            )
-        prev_close = close
-        n += 1
-        if n < ATR_N:
-            s += tr          # seed accumulation: plain sum, like the fold
-            continue
-        if n == ATR_N:
-            atr = _rhalf((s + tr) / ATR_N)
-            s = 0.0
-        else:
-            atr = _rhalf((atr * (ATR_N - 1) + tr) / ATR_N)
-        out_bucket.append(bucket)
-        out_atr.append(atr)
-
-    state.update((prev_close, n, s, atr))
-    yield pd.DataFrame(
-        {
-            "pair": [pair] * len(out_bucket),
-            "bucket": out_bucket,
-            "atr": out_atr,
-        }
-    )
+        tr = _rhalf(
+            max(high - low, abs(high - prev_close), abs(low - prev_close))
+        )
+    n += 1
+    if n < ATR_N:
+        return (close, n, acc + tr, atr), ()  # seed: plain sum, like the fold
+    if n == ATR_N:
+        atr, acc = _rhalf((acc + tr) / ATR_N), 0.0
+    else:
+        atr = _rhalf((atr * (ATR_N - 1) + tr) / ATR_N)
+    return (close, n, acc, atr), ((bar.bucket, atr),)
 
 
-def atr_stream(bars: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, high, low, close) OHLC bars ->
-    per-bucket Wilder ATR.  ``bars`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bars.groupBy("pair").applyInPandasWithState(
-        _update_atr,
-        outputStructType=ATR_OUTPUT_SCHEMA,
-        stateStructType=ATR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-@register(
-    "stream_atr_wilder",
+stream_atr_wilder = _twin(Twin(
+    name="stream_atr_wilder",
     rotation_group=8,
     oracle=SQL_ATR,
     doc="Average True Range as per-pair applyInPandasWithState: state "
@@ -485,85 +501,48 @@ def atr_stream(bars: DataFrame) -> DataFrame:
         "first whose per-row input is a STRUCT (the OHLC bar), not a "
         "scalar close.",
     tags=("streaming", "stateful", "window"),
-)
-def stream_atr_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_ohlc
-
-    stream_dir = _write_ordered_slices(_hourly_ohlc(spark, sf_dir))
-    bars = (
-        spark.readStream.schema(
-            "pair string, bucket timestamp, high double, low double, "
-            "close double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        atr_stream(bars), "stream_atr_wilder", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    feed=_hourly_ohlc,
+    output="pair string, bucket timestamp, atr double",
+    state="prev_close double, n bigint, s double, atr double",
+    init=(None, 0, 0.0, None),
+    step=_atr_step,
+    finish=_by("pair", "bucket"),
+))
 
 
 # ------------------------------------------ streaming CUSUM monitoring
 
-CUSUM_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("event_type", StringType()),
-        StructField("day", TimestampType()),
-        StructField("s_pos", DoubleType()),
-        StructField("s_neg", DoubleType()),
-    ]
-)
 
-CUSUM_STATE_SCHEMA = StructType(
-    [
-        StructField("s_pos", DoubleType()),
-        StructField("s_neg", DoubleType()),
-    ]
-)
-
-
-def _update_cusum(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.anomaly import CUSUM_K
-
-    (event_type,) = key
-    sp, sn = state.get if state.exists else (0.0, 0.0)
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
-    out_day, out_sp, out_sn = [], [], []
-    for bucket, z in zip(rows["bucket"], rows["z"]):
-        z = float(z)
-        sp = _rhalf(max(0.0, sp + z - CUSUM_K))
-        sn = _rhalf(max(0.0, sn - z - CUSUM_K))
-        out_day.append(bucket)
-        out_sp.append(sp)
-        out_sn.append(sn)
-    state.update((sp, sn))
-    yield pd.DataFrame(
-        {
-            "event_type": [event_type] * len(out_day),
-            "day": out_day,
-            "s_pos": out_sp,
-            "s_neg": out_sn,
-        }
+def _cusum_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _cusum_z(spark, sf_dir).select(
+        F.col("event_type").alias("pair"),
+        F.col("day").alias("bucket"),
+        "z",
     )
 
 
-def cusum_stream(zs: DataFrame) -> DataFrame:
-    """Streaming (pair=event_type, bucket=day, z) rows -> per-day CUSUM
-    state.  ``zs`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return zs.groupBy("pair").applyInPandasWithState(
-        _update_cusum,
-        outputStructType=CUSUM_OUTPUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+def _cusum_step(s: tuple, bar: Any) -> tuple[tuple, Iterable[tuple]]:
+    sp, sn = s
+    z = float(bar.z)
+    sp = _rhalf(max(0.0, sp + z - CUSUM_K))
+    sn = _rhalf(max(0.0, sn - z - CUSUM_K))
+    return (sp, sn), ((bar.bucket, sp, sn),)
 
 
-@register(
-    "stream_cusum_alerts",
+def _cusum_alarm(drained: DataFrame) -> DataFrame:
+    return drained.select(
+        "event_type",
+        "day",
+        "s_pos",
+        "s_neg",
+        ((F.col("s_pos") > CUSUM_H) | (F.col("s_neg") > CUSUM_H)).alias(
+            "alarm"
+        ),
+    ).orderBy("event_type", "day")
+
+
+stream_cusum_alerts = _twin(Twin(
+    name="stream_cusum_alerts",
     rotation_group=8,
     oracle=SQL_CUSUM,
     doc="CUSUM drift monitoring as per-type applyInPandasWithState: "
@@ -577,104 +556,33 @@ def cusum_stream(zs: DataFrame) -> DataFrame:
         "recursive-CTE oracle row-for-row.  Third recursive stateful "
         "proof; first where part of the model is trained out-of-band.",
     tags=("streaming", "stateful", "profiling"),
-)
-def stream_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.anomaly import CUSUM_H, _cusum_z  # noqa: F811
-
-    z = _cusum_z(spark, sf_dir).select(
-        F.col("event_type").alias("pair"),
-        F.col("day").alias("bucket"),
-        "z",
-    )
-    stream_dir = _write_ordered_slices(z)
-    src = (
-        spark.readStream.schema("pair string, bucket timestamp, z double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    out = run_to_memory(cusum_stream(src), "stream_cusum_alerts", "append", state_partitions=FEW_KEY_STATE_PARTITIONS)
-    return out.select(
-        "event_type",
-        "day",
-        "s_pos",
-        "s_neg",
-        ((F.col("s_pos") > CUSUM_H) | (F.col("s_neg") > CUSUM_H)).alias(
-            "alarm"
-        ),
-    ).orderBy("event_type", "day")
+    feed=_cusum_feed,
+    output="event_type string, day timestamp, s_pos double, s_neg double",
+    state="s_pos double, s_neg double",
+    init=(0.0, 0.0),
+    step=_cusum_step,
+    finish=_cusum_alarm,
+))
 
 
 # ------------------------------------------ streaming Heikin-Ashi bars
 
-HA_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("pair", StringType()),
-        StructField("bucket", TimestampType()),
-        StructField("ha_open", DoubleType()),
-        StructField("ha_high", DoubleType()),
-        StructField("ha_low", DoubleType()),
-        StructField("ha_close", DoubleType()),
-    ]
-)
 
-HA_STATE_SCHEMA = StructType(
-    [
-        StructField("ho", DoubleType()),
-        StructField("hc", DoubleType()),
-    ]
-)
-
-
-def _update_heikin_ashi(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    (pair,) = key
-    ho, hc = state.get if state.exists else (None, None)
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
-    out: dict[str, list] = {
-        "bucket": [], "ha_open": [], "ha_high": [], "ha_low": [],
-        "ha_close": [],
-    }
-    for bucket, o, h, lo_, c in zip(
-        rows["bucket"], rows["open"], rows["high"], rows["low"],
-        rows["close"],
-    ):
-        o, h, lo_, c = float(o), float(h), float(lo_), float(c)
-        # the SAME float sequence as the batch fold: left-associated
-        # sum, exact /4 and /2 (exponent shifts), one HALF_UP round
-        hc_new = _rhalf((o + h + lo_ + c) / 4)
-        ho = _rhalf((o + c) / 2) if ho is None else _rhalf((ho + hc) / 2)
-        hc = hc_new
-        out["bucket"].append(bucket)
-        out["ha_open"].append(ho)
-        out["ha_high"].append(max(h, ho, hc_new))
-        out["ha_low"].append(min(lo_, ho, hc_new))
-        out["ha_close"].append(hc_new)
-
-    state.update((ho, hc))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
-
-
-def heikin_ashi_stream(bars: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, open, high, low, close) bars ->
-    Heikin-Ashi bars.  ``bars`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bars.groupBy("pair").applyInPandasWithState(
-        _update_heikin_ashi,
-        outputStructType=HA_OUTPUT_SCHEMA,
-        stateStructType=HA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+def _heikin_ashi_step(s: tuple, bar: Any) -> tuple[tuple, Iterable[tuple]]:
+    ho, hc = s
+    o, h, lo_, c = (
+        float(bar.open), float(bar.high), float(bar.low), float(bar.close)
     )
+    # the SAME float sequence as the batch fold: left-associated
+    # sum, exact /4 and /2 (exponent shifts), one HALF_UP round
+    hc_new = _rhalf((o + h + lo_ + c) / 4)
+    ho = _rhalf((o + c) / 2) if ho is None else _rhalf((ho + hc) / 2)
+    row = (bar.bucket, ho, max(h, ho, hc_new), min(lo_, ho, hc_new), hc_new)
+    return (ho, hc_new), (row,)
 
 
-from ..operators.candles import SQL_HEIKIN_ASHI  # noqa: E402
-
-
-@register(
-    "stream_heikin_ashi",
+stream_heikin_ashi = _twin(Twin(
+    name="stream_heikin_ashi",
     rotation_group=8,
     oracle=SQL_HEIKIN_ASHI,
     doc="Heikin-Ashi smoothing as per-pair applyInPandasWithState: "
@@ -689,125 +597,62 @@ from ..operators.candles import SQL_HEIKIN_ASHI  # noqa: E402
         "the only one whose output starts at the FIRST bar (no "
         "warmup window).",
     tags=("streaming", "stateful", "aggregation"),
-)
-def stream_heikin_ashi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_ohlc4
-
-    stream_dir = _write_ordered_slices(_hourly_ohlc4(spark, sf_dir))
-    bars = (
-        spark.readStream.schema(
-            "pair string, bucket timestamp, open double, high double, "
-            "low double, close double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        heikin_ashi_stream(bars), "stream_heikin_ashi", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    feed=_hourly_ohlc4,
+    output="pair string, bucket timestamp, ha_open double, "
+           "ha_high double, ha_low double, ha_close double",
+    state="ho double, hc double",
+    init=(None, None),
+    step=_heikin_ashi_step,
+    finish=_by("pair", "bucket"),
+))
 
 
 # --------------------------------------------- streaming Ichimoku cloud
 
-ICHI_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("pair", StringType()),
-        StructField("bucket", TimestampType()),
-        StructField("tenkan", DoubleType()),
-        StructField("kijun", DoubleType()),
-        StructField("senkou_a", DoubleType()),
-        StructField("senkou_b", DoubleType()),
-        StructField("close", DoubleType()),
-    ]
-)
 
-# Ring buffer of the last ICHI_S (high, low) bars + FIFO queues of the
-# raw (unrounded) cloud-line values awaiting their ICHI_K-bar forward
-# displacement: ~(52*2 + 26*2 + 1) scalars per pair, bounded by live
-# pairs, never by history.
-ICHI_STATE_SCHEMA = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("highs", ArrayType(DoubleType())),
-        StructField("lows", ArrayType(DoubleType())),
-        StructField("pend_a", ArrayType(DoubleType())),
-        StructField("pend_b", ArrayType(DoubleType())),
-    ]
-)
+def _ichimoku_step(s: tuple, bar: Any) -> tuple[tuple, Iterable[tuple]]:
+    n, highs, lows, pend_a, pend_b = s
+    highs = [*highs, float(bar.high)][-ICHI_S:]
+    lows = [*lows, float(bar.low)][-ICHI_S:]
+    n += 1
 
+    # the SAME arithmetic as the batch sliding frames: max + min of
+    # identical doubles, sum-and-halve (exact in IEEE), raw here --
+    # rounding happens once at emission, like the batch SELECT.
+    def _mid(k: int) -> float:
+        return (max(highs[-k:]) + min(lows[-k:])) / 2.0
 
-def _update_ichimoku(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import ICHI_K, ICHI_S, ICHI_T
+    tenkan_raw = _mid(ICHI_T)
+    kijun_raw = _mid(ICHI_K)
+    pend_a = [*pend_a, (tenkan_raw + kijun_raw) / 2.0]
+    pend_b = [*pend_b, _mid(ICHI_S)]
+    sen_a_raw = sen_b_raw = None
+    if len(pend_a) > ICHI_K:  # the value computed ICHI_K bars ago
+        sen_a_raw, pend_a = pend_a[0], pend_a[1:]
+        sen_b_raw, pend_b = pend_b[0], pend_b[1:]
 
-    (pair,) = key
-    if state.exists:
-        n, highs, lows, pend_a, pend_b = state.get
-        highs, lows = list(highs), list(lows)
-        pend_a, pend_b = list(pend_a), list(pend_b)
-    else:
-        n, highs, lows, pend_a, pend_b = 0, [], [], [], []
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
-    out: dict[str, list] = {
-        "bucket": [], "tenkan": [], "kijun": [],
-        "senkou_a": [], "senkou_b": [], "close": [],
-    }
-    for bucket, high, low, close in zip(
-        rows["bucket"], rows["high"], rows["low"], rows["close"]
-    ):
-        highs.append(float(high))
-        lows.append(float(low))
-        if len(highs) > ICHI_S:
-            highs.pop(0)
-            lows.pop(0)
-        n += 1
-
-        # the SAME arithmetic as the batch sliding frames: max + min of
-        # identical doubles, sum-and-halve (exact in IEEE), raw here --
-        # rounding happens once at emission, like the batch SELECT.
-        def _mid(k: int) -> float:
-            return (max(highs[-k:]) + min(lows[-k:])) / 2.0
-
-        tenkan_raw = _mid(ICHI_T)
-        kijun_raw = _mid(ICHI_K)
-        pend_a.append((tenkan_raw + kijun_raw) / 2.0)
-        pend_b.append(_mid(ICHI_S))
-        sen_a_raw = sen_b_raw = None
-        if len(pend_a) > ICHI_K:  # the value computed ICHI_K bars ago
-            sen_a_raw = pend_a.pop(0)
-            sen_b_raw = pend_b.pop(0)
-
-        if n >= ICHI_S + ICHI_K:
-            out["bucket"].append(bucket)
-            out["tenkan"].append(_rhalf(tenkan_raw))
-            out["kijun"].append(_rhalf(kijun_raw))
-            out["senkou_a"].append(_rhalf(sen_a_raw))
-            out["senkou_b"].append(_rhalf(sen_b_raw))
-            out["close"].append(float(close))
-
-    state.update((n, highs, lows, pend_a, pend_b))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
+    rows: tuple[tuple, ...] = ()
+    if n >= ICHI_S + ICHI_K:
+        rows = ((
+            bar.bucket, _rhalf(tenkan_raw), _rhalf(kijun_raw),
+            _rhalf(sen_a_raw), _rhalf(sen_b_raw), float(bar.close),
+        ),)
+    return (n, highs, lows, pend_a, pend_b), rows
 
 
-def ichimoku_stream(bars: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, high, low, close) OHLC bars -> per-bar
-    Ichimoku lines (chikou excluded: it is a backward displacement of a
-    FUTURE close, applied after the drain).  ``bars`` must be a
-    streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bars.groupBy("pair").applyInPandasWithState(
-        _update_ichimoku,
-        outputStructType=ICHI_OUTPUT_SCHEMA,
-        stateStructType=ICHI_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+def _chikou(drained: DataFrame) -> DataFrame:
+    """Chikou is the close displaced BACKWARD -- a FUTURE value at
+    emission time -- so it is a LEAD over the drained output."""
+    w = Window.partitionBy("pair").orderBy("bucket")
+    return (
+        drained.withColumn("chikou", F.lead("close", ICHI_K).over(w))
+        .drop("close")
+        .orderBy("pair", "bucket")
     )
 
 
-@register(
-    "stream_ichimoku",
+stream_ichimoku = _twin(Twin(
+    name="stream_ichimoku",
     rotation_group=9,
     oracle=SQL_ICHIMOKU,
     doc="Ichimoku cloud as per-pair applyInPandasWithState: state is a "
@@ -828,122 +673,54 @@ def ichimoku_stream(bars: DataFrame) -> DataFrame:
         "oracle; the only non-recursive stateful twin (sliding "
         "channels + displacement queues, no fold).",
     tags=("streaming", "stateful", "window"),
-)
-def stream_ichimoku(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from ..operators.candles import ICHI_K, _hourly_ohlc
-
-    stream_dir = _write_ordered_slices(_hourly_ohlc(spark, sf_dir))
-    bars = (
-        spark.readStream.schema(
-            "pair string, bucket timestamp, high double, low double, "
-            "close double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    drained = run_to_memory(
-        ichimoku_stream(bars), "stream_ichimoku", "append", state_partitions=FEW_KEY_STATE_PARTITIONS)
-    w = Window.partitionBy("pair").orderBy("bucket")
-    return (
-        drained.withColumn("chikou", F.lead("close", ICHI_K).over(w))
-        .drop("close")
-        .orderBy("pair", "bucket")
-    )
+    feed=_hourly_ohlc,
+    output="pair string, bucket timestamp, tenkan double, kijun double, "
+           "senkou_a double, senkou_b double, close double",
+    # Ring buffer of the last ICHI_S (high, low) bars + FIFO queues of
+    # the raw (unrounded) cloud-line values awaiting their ICHI_K-bar
+    # forward displacement: ~(52*2 + 26*2 + 1) scalars per pair,
+    # bounded by live pairs, never by history.
+    state="n bigint, highs array<double>, lows array<double>, "
+          "pend_a array<double>, pend_b array<double>",
+    init=(0, [], [], [], []),
+    step=_ichimoku_step,
+    finish=_chikou,
+))
 
 
 # --------------------------------------------- streaming Bollinger bands
 
-BB_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("pair", StringType()),
-        StructField("bucket", TimestampType()),
-        StructField("close", DoubleType()),
-        StructField("mid", DoubleType()),
-        StructField("upper", DoubleType()),
-        StructField("lower", DoubleType()),
-        StructField("breakout", BooleanType()),
-    ]
-)
 
-# Ring buffer of the last BB_N rounded closes per pair: BB_N doubles +
-# a counter -- bounded by live pairs, never by history.
-BB_STATE_SCHEMA = StructType(
-    [
-        StructField("ring", ArrayType(DoubleType())),
-    ]
-)
-
-
-def _dquant(x: float) -> Decimal:
-    """Spark's CAST(double AS DECIMAL(38, DD_ROUND)) in Python: shortest
-    decimal repr (java Double.toString == Python repr digits), then
-    HALF_UP at the scale.  Exact for already-rounded closes; matches
-    the batch's windowed-DECIMAL-sum terms for c*c."""
-    return Decimal(repr(x)).quantize(_QUANT, rounding=ROUND_HALF_UP)
-
-
-def _update_bollinger(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    import math
-
-    from ..operators.candles import BB_K, BB_N
-
-    (pair,) = key
-    ring: list[float] = list(state.get[0]) if state.exists else []
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
-    out: dict[str, list] = {
-        "bucket": [], "close": [], "mid": [],
-        "upper": [], "lower": [], "breakout": [],
-    }
-    for bucket, c in zip(rows["bucket"], rows["c"]):
-        c = float(c)
-        ring.append(c)
-        if len(ring) > BB_N:
-            ring.pop(0)
-        if len(ring) < BB_N:
-            continue
-        # The batch form's EXACT arithmetic: windowed DECIMAL(38,R)
-        # sums of c and c*c cast back to double, then pure IEEE ops.
-        sx = float(sum((_dquant(x) for x in ring), Decimal(0)))
-        sxx = float(sum((_dquant(x * x) for x in ring), Decimal(0)))
-        sd = math.sqrt(max(BB_N * sxx - sx * sx, 0.0)) / BB_N
-        mid = _r6(sx / BB_N)
-        upper = _r6(sx / BB_N + BB_K * sd)
-        lower = _r6(sx / BB_N - BB_K * sd)
-        out["bucket"].append(bucket)
-        out["close"].append(c)
-        out["mid"].append(mid)
-        out["upper"].append(upper)
-        out["lower"].append(lower)
-        out["breakout"].append(c > upper or c < lower)
-
-    state.update((ring,))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
-
-
-def bollinger_stream(closes: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, c) rounded-close rows -> full-window
-    Bollinger band rows.  ``closes`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return closes.groupBy("pair").applyInPandasWithState(
-        _update_bollinger,
-        outputStructType=BB_OUTPUT_SCHEMA,
-        stateStructType=BB_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+def _rounded_closes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # fround, matching window_bollinger_bands' base column and the
+    # shared SQL_BOLLINGER oracle text exactly (the F.round it replaced
+    # was invisible on 2-dp closes but a latent half-grid divergence).
+    return _hourly_closes(spark, sf_dir).select(
+        "pair", "bucket", fround("close").alias("c")
     )
 
 
-@register(
-    "stream_bollinger_bands",
+def _bollinger_step(s: tuple, bar: Any) -> tuple[tuple, Iterable[tuple]]:
+    c = float(bar.c)
+    ring = [*s[0], c][-BB_N:]
+    if len(ring) < BB_N:
+        return (ring,), ()
+    # The batch form's EXACT arithmetic: windowed DECIMAL(38,R)
+    # sums of c and c*c cast back to double, then pure IEEE ops.
+    sx = float(sum((_dquant(x) for x in ring), Decimal(0)))
+    sxx = float(sum((_dquant(x * x) for x in ring), Decimal(0)))
+    sd = math.sqrt(max(BB_N * sxx - sx * sx, 0.0)) / BB_N
+    mid = _r6(sx / BB_N)
+    upper = _r6(sx / BB_N + BB_K * sd)
+    lower = _r6(sx / BB_N - BB_K * sd)
+    return (ring,), ((bar.bucket, c, mid, upper, lower, c > upper or c < lower),)
+
+
+stream_bollinger_bands = _twin(Twin(
+    name="stream_bollinger_bands",
     rotation_group=10,
     oracle=SQL_BOLLINGER,
-    doc=f"Bollinger bands as per-pair applyInPandasWithState -- the "
+    doc="Bollinger bands as per-pair applyInPandasWithState -- the "
         "sliding-channel stateful twin of window_bollinger_bands "
         "(r10 verdict item #6).  State is a ring of the last "
         "BB_N rounded closes per pair (~24 doubles, bounded by live "
@@ -956,113 +733,46 @@ def bollinger_stream(closes: DataFrame) -> DataFrame:
         "batch == the shared SQL_BOLLINGER oracle row-for-row "
         "(tests/test_round11_ops.py).",
     tags=("streaming", "stateful", "window"),
-)
-def stream_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_closes, fround
-
-    # fround, matching window_bollinger_bands' base column and the
-    # shared SQL_BOLLINGER oracle text exactly (the F.round it replaced
-    # was invisible on 2-dp closes but a latent half-grid divergence).
-    base = _hourly_closes(spark, sf_dir).select(
-        "pair", "bucket", fround("close").alias("c")
-    )
-    stream_dir = _write_ordered_slices(base)
-    closes = (
-        spark.readStream.schema("pair string, bucket timestamp, c double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        bollinger_stream(closes), "stream_bollinger_bands", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    feed=_rounded_closes,
+    output="pair string, bucket timestamp, close double, mid double, "
+           "upper double, lower double, breakout boolean",
+    # Ring buffer of the last BB_N rounded closes per pair -- bounded
+    # by live pairs, never by history.
+    state="ring array<double>",
+    init=([],),
+    step=_bollinger_step,
+    finish=_by("pair", "bucket"),
+))
 
 
 # ------------------------------------------ streaming stochastic (K, D)
 
-STOCH_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("pair", StringType()),
-        StructField("bucket", TimestampType()),
-        StructField("pct_k", DoubleType()),
-        StructField("pct_d", DoubleType()),
-    ]
-)
 
-# Ring of the last STOCH_N (high, low) bars + the last STOCH_D %K
-# values awaiting the SMA + the bar counter -- ~31 scalars per pair.
-STOCH_STATE_SCHEMA = StructType(
-    [
-        StructField("rn", LongType()),
-        StructField("highs", ArrayType(DoubleType())),
-        StructField("lows", ArrayType(DoubleType())),
-        StructField("kq", ArrayType(DoubleType())),
-    ]
-)
-
-
-def _update_stochastic(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import STOCH_D, STOCH_N
-
-    (pair,) = key
-    if state.exists:
-        rn, highs, lows, kq = state.get
-        highs, lows, kq = list(highs), list(lows), list(kq)
-    else:
-        rn, highs, lows, kq = 0, [], [], []
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
-    out: dict[str, list] = {"bucket": [], "pct_k": [], "pct_d": []}
-    for bucket, high, low, close in zip(
-        rows["bucket"], rows["high"], rows["low"], rows["close"]
-    ):
-        highs.append(float(high))
-        lows.append(float(low))
-        if len(highs) > STOCH_N:
-            highs.pop(0)
-            lows.pop(0)
-        rn += 1
-        if rn < STOCH_N:
-            continue
-        hi, lo = max(highs), min(lows)
-        # the batch form's exact arithmetic: flat channel pins 50,
-        # otherwise one IEEE expression fround-ed at 9 dp
-        k = (
-            50.0
-            if hi == lo
-            else _rhalf(100.0 * (float(close) - lo) / (hi - lo))
-        )
-        kq.append(k)
-        if len(kq) > STOCH_D:
-            kq.pop(0)
-        if rn < STOCH_N + STOCH_D - 1:
-            continue
-        # LAG(k,2) + LAG(k,1) + k: same left-associated 3-term sum
-        pct_d = _rhalf((kq[0] + kq[1] + kq[2]) / 3.0)
-        out["bucket"].append(bucket)
-        out["pct_k"].append(k)
-        out["pct_d"].append(pct_d)
-
-    state.update((rn, highs, lows, kq))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
-
-
-def stochastic_stream(bars: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, high, low, close) OHLC bars ->
-    stochastic %K/%D rows.  ``bars`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bars.groupBy("pair").applyInPandasWithState(
-        _update_stochastic,
-        outputStructType=STOCH_OUTPUT_SCHEMA,
-        stateStructType=STOCH_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+def _stochastic_step(s: tuple, bar: Any) -> tuple[tuple, Iterable[tuple]]:
+    rn, highs, lows, kq = s
+    highs = [*highs, float(bar.high)][-STOCH_N:]
+    lows = [*lows, float(bar.low)][-STOCH_N:]
+    rn += 1
+    if rn < STOCH_N:
+        return (rn, highs, lows, kq), ()
+    hi, lo = max(highs), min(lows)
+    # the batch form's exact arithmetic: flat channel pins 50,
+    # otherwise one IEEE expression fround-ed at 9 dp
+    k = (
+        50.0
+        if hi == lo
+        else _rhalf(100.0 * (float(bar.close) - lo) / (hi - lo))
     )
+    kq = [*kq, k][-STOCH_D:]
+    if rn < STOCH_N + STOCH_D - 1:
+        return (rn, highs, lows, kq), ()
+    # LAG(k,2) + LAG(k,1) + k: same left-associated 3-term sum
+    pct_d = _rhalf((kq[0] + kq[1] + kq[2]) / 3.0)
+    return (rn, highs, lows, kq), ((bar.bucket, k, pct_d),)
 
 
-@register(
-    "stream_stochastic_oscillator",
+stream_stochastic_oscillator = _twin(Twin(
+    name="stream_stochastic_oscillator",
     rotation_group=10,
     oracle=SQL_STOCHASTIC,
     doc="Stochastic oscillator as per-pair applyInPandasWithState -- "
@@ -1076,117 +786,58 @@ def stochastic_stream(bars: DataFrame) -> DataFrame:
         "over 3.  streamed == batch == the shared SQL_STOCHASTIC "
         "oracle row-for-row (tests/test_round11_ops.py).",
     tags=("streaming", "stateful", "window"),
-)
-def stream_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_ohlc
-
-    stream_dir = _write_ordered_slices(_hourly_ohlc(spark, sf_dir))
-    bars = (
-        spark.readStream.schema(
-            "pair string, bucket timestamp, high double, low double, "
-            "close double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        stochastic_stream(bars), "stream_stochastic_oscillator", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    feed=_hourly_ohlc,
+    output="pair string, bucket timestamp, pct_k double, pct_d double",
+    # Ring of the last STOCH_N (high, low) bars + the last STOCH_D %K
+    # values awaiting the SMA + the bar counter -- ~31 scalars per pair.
+    state="rn bigint, highs array<double>, lows array<double>, "
+          "kq array<double>",
+    init=(0, [], [], []),
+    step=_stochastic_step,
+    finish=_by("pair", "bucket"),
+))
 
 
 # --------------------------------------- streaming Keltner channels
 
-KC_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("pair", StringType()),
-        StructField("bucket", TimestampType()),
-        StructField("mid", DoubleType()),
-        StructField("upper", DoubleType()),
-        StructField("lower", DoubleType()),
-    ]
-)
-
-# Two SMA-seeded EMA folds' accumulators + prev_close: 6 scalars per
-# pair -- the smallest state in the family.
-KC_STATE_SCHEMA = StructType(
-    [
-        StructField("i", LongType()),
-        StructField("s_tp", DoubleType()),
-        StructField("s_tr", DoubleType()),
-        StructField("ema", DoubleType()),
-        StructField("atr", DoubleType()),
-        StructField("prev_close", DoubleType()),
-    ]
-)
+_KC_AL = 2.0 / (KC_N + 1)  # plain-alpha EMA; ATR uses Wilder's form
 
 
-def _update_keltner(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import KC_ATR_N, KC_K, KC_N
-
-    (pair,) = key
-    if state.exists:
-        i, s_tp, s_tr, ema, atr, prev_close = state.get
-    else:
-        i, s_tp, s_tr, ema, atr, prev_close = 0, 0.0, 0.0, None, None, None
-
-    al = 2.0 / (KC_N + 1)  # plain-alpha EMA; ATR uses Wilder's form
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
-    out: dict[str, list] = {"bucket": [], "mid": [], "upper": [], "lower": []}
-    for bucket, high, low, close in zip(
-        rows["bucket"], rows["high"], rows["low"], rows["close"]
-    ):
-        high, low, close = float(high), float(low), float(close)
-        # the batch form's pre-fold projections, 9-dp HALF_UP
-        tp = _rhalf((high + low + close) / 3.0)
-        tr = _rhalf(
-            high - low
-            if prev_close is None
-            else max(high - low, abs(high - prev_close), abs(low - prev_close))
-        )
-        prev_close = close
-        i += 1
-        # _ema_fold(tp, KC_N): SMA seed at bar KC_N, plain-alpha after
-        if i < KC_N:
-            s_tp += tp
-        elif i == KC_N:
-            ema = _rhalf((s_tp + tp) / KC_N)
-        else:
-            ema = _rhalf(al * tp + (1.0 - al) * ema)
-        # _ema_fold(tr, KC_ATR_N, wilder): (prev*(n-1) + x)/n
-        if i < KC_ATR_N:
-            s_tr += tr
-        elif i == KC_ATR_N:
-            atr = _rhalf((s_tr + tr) / KC_ATR_N)
-        else:
-            atr = _rhalf((atr * (KC_ATR_N - 1) + tr) / KC_ATR_N)
-        if i < KC_N:  # bands emit from the later seed onward
-            continue
-        out["bucket"].append(bucket)
-        out["mid"].append(ema)
-        out["upper"].append(_rhalf(ema + float(KC_K) * atr))
-        out["lower"].append(_rhalf(ema - float(KC_K) * atr))
-
-    state.update((i, s_tp, s_tr, ema, atr, prev_close))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
-
-
-def keltner_stream(bars: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, high, low, close) OHLC bars -> Keltner
-    channel rows.  ``bars`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bars.groupBy("pair").applyInPandasWithState(
-        _update_keltner,
-        outputStructType=KC_OUTPUT_SCHEMA,
-        stateStructType=KC_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+def _keltner_step(s: tuple, bar: Any) -> tuple[tuple, Iterable[tuple]]:
+    i, s_tp, s_tr, ema, atr, prev_close = s
+    high, low, close = float(bar.high), float(bar.low), float(bar.close)
+    # the batch form's pre-fold projections, 9-dp HALF_UP
+    tp = _rhalf((high + low + close) / 3.0)
+    tr = _rhalf(
+        high - low
+        if prev_close is None
+        else max(high - low, abs(high - prev_close), abs(low - prev_close))
     )
+    i += 1
+    # _ema_fold(tp, KC_N): SMA seed at bar KC_N, plain-alpha after
+    if i < KC_N:
+        s_tp += tp
+    elif i == KC_N:
+        ema = _rhalf((s_tp + tp) / KC_N)
+    else:
+        ema = _rhalf(_KC_AL * tp + (1.0 - _KC_AL) * ema)
+    # _ema_fold(tr, KC_ATR_N, wilder): (prev*(n-1) + x)/n
+    if i < KC_ATR_N:
+        s_tr += tr
+    elif i == KC_ATR_N:
+        atr = _rhalf((s_tr + tr) / KC_ATR_N)
+    else:
+        atr = _rhalf((atr * (KC_ATR_N - 1) + tr) / KC_ATR_N)
+    state = (i, s_tp, s_tr, ema, atr, close)
+    if i < KC_N:  # bands emit from the later seed onward
+        return state, ()
+    upper = _rhalf(ema + float(KC_K) * atr)
+    lower = _rhalf(ema - float(KC_K) * atr)
+    return state, ((bar.bucket, ema, upper, lower),)
 
 
-@register(
-    "stream_keltner_channels",
+stream_keltner_channels = _twin(Twin(
+    name="stream_keltner_channels",
     rotation_group=10,
     oracle=SQL_KELTNER,
     doc="Keltner channels as per-pair applyInPandasWithState -- the "
@@ -1202,121 +853,59 @@ def keltner_stream(bars: DataFrame) -> DataFrame:
         "streamed == batch == the shared SQL_KELTNER recursive-CTE "
         "oracle row-for-row (tests/test_round11_ops.py).",
     tags=("streaming", "stateful", "window"),
-)
-def stream_keltner_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_ohlc
-
-    stream_dir = _write_ordered_slices(_hourly_ohlc(spark, sf_dir))
-    bars = (
-        spark.readStream.schema(
-            "pair string, bucket timestamp, high double, low double, "
-            "close double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        keltner_stream(bars), "stream_keltner_channels", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    feed=_hourly_ohlc,
+    output="pair string, bucket timestamp, mid double, upper double, "
+           "lower double",
+    # Two SMA-seeded EMA folds' accumulators + prev_close: 6 scalars per
+    # pair -- the smallest state in the family.
+    state="i bigint, s_tp double, s_tr double, ema double, atr double, "
+          "prev_close double",
+    init=(0, 0.0, 0.0, None, None, None),
+    step=_keltner_step,
+    finish=_by("pair", "bucket"),
+))
 
 
 # ------------------------------------------------------ streaming MACD
 
-MACD_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("pair", StringType()),
-        StructField("bucket", TimestampType()),
-        StructField("macd", DoubleType()),
-        StructField("signal", DoubleType()),
-        StructField("histogram", DoubleType()),
-    ]
-)
-
-# Three coupled SMA-seeded EMA folds: eight scalars per pair.
-MACD_STATE_SCHEMA = StructType(
-    [
-        StructField("i", LongType()),
-        StructField("s_fast", DoubleType()),
-        StructField("s_slow", DoubleType()),
-        StructField("e_fast", DoubleType()),
-        StructField("e_slow", DoubleType()),
-        StructField("j", LongType()),
-        StructField("s_sig", DoubleType()),
-        StructField("e_sig", DoubleType()),
-    ]
-)
+_AL_F = 2.0 / (MACD_FAST + 1)
+_AL_S = 2.0 / (MACD_SLOW + 1)
+_AL_G = 2.0 / (MACD_SIG + 1)
 
 
-def _update_macd(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import MACD_FAST, MACD_SIG, MACD_SLOW
-
-    (pair,) = key
-    if state.exists:
-        i, s_fast, s_slow, e_fast, e_slow, j, s_sig, e_sig = state.get
+def _macd_step(s: tuple, bar: Any) -> tuple[tuple, Iterable[tuple]]:
+    i, s_fast, s_slow, e_fast, e_slow, j, s_sig, e_sig = s
+    close = float(bar.close)
+    i += 1
+    if i < MACD_FAST:
+        s_fast += close
+    elif i == MACD_FAST:
+        e_fast = _rhalf((s_fast + close) / MACD_FAST)
     else:
-        i, s_fast, s_slow, e_fast, e_slow, j, s_sig, e_sig = (
-            0, 0.0, 0.0, None, None, 0, 0.0, None,
-        )
-
-    al_f = 2.0 / (MACD_FAST + 1)
-    al_s = 2.0 / (MACD_SLOW + 1)
-    al_g = 2.0 / (MACD_SIG + 1)
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
-    out: dict[str, list] = {
-        "bucket": [], "macd": [], "signal": [], "histogram": [],
-    }
-    for bucket, close in zip(rows["bucket"], rows["close"]):
-        close = float(close)
-        i += 1
-        if i < MACD_FAST:
-            s_fast += close
-        elif i == MACD_FAST:
-            e_fast = _rhalf((s_fast + close) / MACD_FAST)
-        else:
-            e_fast = _rhalf(al_f * close + (1.0 - al_f) * e_fast)
-        if i < MACD_SLOW:
-            s_slow += close
-        elif i == MACD_SLOW:
-            e_slow = _rhalf((s_slow + close) / MACD_SLOW)
-        else:
-            e_slow = _rhalf(al_s * close + (1.0 - al_s) * e_slow)
-        if i < MACD_SLOW:
-            continue
+        e_fast = _rhalf(_AL_F * close + (1.0 - _AL_F) * e_fast)
+    if i < MACD_SLOW:
+        s_slow += close
+    elif i == MACD_SLOW:
+        e_slow = _rhalf((s_slow + close) / MACD_SLOW)
+    else:
+        e_slow = _rhalf(_AL_S * close + (1.0 - _AL_S) * e_slow)
+    rows: tuple[tuple, ...] = ()
+    if i >= MACD_SLOW:
         macd = _rhalf(e_fast - e_slow)  # _MACD_ARR's per-element round
         j += 1
         if j < MACD_SIG:
             s_sig += macd
-            continue
-        if j == MACD_SIG:
-            e_sig = _rhalf((s_sig + macd) / MACD_SIG)
         else:
-            e_sig = _rhalf(al_g * macd + (1.0 - al_g) * e_sig)
-        out["bucket"].append(bucket)
-        out["macd"].append(macd)
-        out["signal"].append(e_sig)
-        out["histogram"].append(_r6(macd - e_sig))
-
-    state.update((i, s_fast, s_slow, e_fast, e_slow, j, s_sig, e_sig))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
+            if j == MACD_SIG:
+                e_sig = _rhalf((s_sig + macd) / MACD_SIG)
+            else:
+                e_sig = _rhalf(_AL_G * macd + (1.0 - _AL_G) * e_sig)
+            rows = ((bar.bucket, macd, e_sig, _r6(macd - e_sig)),)
+    return (i, s_fast, s_slow, e_fast, e_slow, j, s_sig, e_sig), rows
 
 
-def macd_stream(closes: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, close) rows -> MACD/signal/histogram
-    rows.  ``closes`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return closes.groupBy("pair").applyInPandasWithState(
-        _update_macd,
-        outputStructType=MACD_OUTPUT_SCHEMA,
-        stateStructType=MACD_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-@register(
-    "stream_macd",
+stream_macd = _twin(Twin(
+    name="stream_macd",
     rotation_group=10,
     oracle=SQL_MACD,
     doc="MACD(12,26,9) as per-pair applyInPandasWithState: EIGHT "
@@ -1330,81 +919,44 @@ def macd_stream(closes: DataFrame) -> DataFrame:
         "alignment.  streamed == batch == the shared SQL_MACD "
         "triple-recursion oracle row-for-row.",
     tags=("streaming", "stateful", "window"),
-)
-def stream_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_closes
-
-    stream_dir = _write_ordered_slices(_hourly_closes(spark, sf_dir))
-    closes = (
-        spark.readStream.schema("pair string, bucket timestamp, close double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        macd_stream(closes), "stream_macd", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    feed=_hourly_closes,
+    output="pair string, bucket timestamp, macd double, signal double, "
+           "histogram double",
+    # Three coupled SMA-seeded EMA folds: eight scalars per pair.
+    state="i bigint, s_fast double, s_slow double, e_fast double, "
+          "e_slow double, j bigint, s_sig double, e_sig double",
+    init=(0, 0.0, 0.0, None, None, 0, 0.0, None),
+    step=_macd_step,
+    finish=_by("pair", "bucket"),
+))
 
 
 # --------------------------------------------- streaming OBV (exact)
 
-OBV_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("pair", StringType()),
-        StructField("bucket", TimestampType()),
-        StructField("obv", LongType()),
-    ]
-)
 
-OBV_STATE_SCHEMA = StructType(
-    [
-        StructField("prev_close", DoubleType()),
-        StructField("obv", LongType()),
-    ]
-)
+def _closes_with_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = load_table(spark, sf_dir, "events")
+    hourly = e.groupBy(
+        F.col("event_type").alias("pair"),
+        F.date_trunc("hour", "ts").alias("bucket"),
+    ).agg(F.count("*").cast("bigint").alias("volume"))
+    return _hourly_closes(spark, sf_dir).join(hourly, ["pair", "bucket"])
 
 
-def _update_obv(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    (pair,) = key
-    prev_close, obv = state.get if state.exists else (None, 0)
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
-    out: dict[str, list] = {"bucket": [], "obv": []}
-    for bucket, close, volume in zip(
-        rows["bucket"], rows["close"], rows["volume"]
-    ):
-        close, volume = float(close), int(volume)
-        if prev_close is None:
-            prev_close = close
-            continue
-        if close > prev_close:
-            obv += volume
-        elif close < prev_close:
-            obv -= volume
-        prev_close = close
-        out["bucket"].append(bucket)
-        out["obv"].append(obv)
-
-    state.update((prev_close, obv))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
+def _obv_step(s: tuple, bar: Any) -> tuple[tuple, Iterable[tuple]]:
+    prev_close, obv = s
+    close, volume = float(bar.close), int(bar.volume)
+    if prev_close is None:
+        return (close, obv), ()
+    if close > prev_close:
+        obv += volume
+    elif close < prev_close:
+        obv -= volume
+    return (close, obv), ((bar.bucket, obv),)
 
 
-def obv_stream(bars: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, close, volume) rows -> running OBV.
-    ``bars`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bars.groupBy("pair").applyInPandasWithState(
-        _update_obv,
-        outputStructType=OBV_OUTPUT_SCHEMA,
-        stateStructType=OBV_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-@register(
-    "stream_obv",
+stream_obv = _twin(Twin(
+    name="stream_obv",
     rotation_group=10,
     oracle=SQL_OBV,
     doc="On-balance volume as per-pair applyInPandasWithState: TWO "
@@ -1415,104 +967,37 @@ def obv_stream(bars: DataFrame) -> DataFrame:
         "batch WHERE prev_close IS NOT NULL.  streamed == batch == "
         "the shared SQL_OBV oracle row-for-row.",
     tags=("streaming", "stateful", "window"),
-)
-def stream_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_closes
-    from ..sources.catalog import load_table
-
-    e = load_table(spark, sf_dir, "events")
-    hourly = e.groupBy(
-        F.col("event_type").alias("pair"),
-        F.date_trunc("hour", "ts").alias("bucket"),
-    ).agg(F.count("*").cast("bigint").alias("volume"))
-    bars = _hourly_closes(spark, sf_dir).join(hourly, ["pair", "bucket"])
-    stream_dir = _write_ordered_slices(bars)
-    feed = (
-        spark.readStream.schema(
-            "pair string, bucket timestamp, close double, volume long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        obv_stream(feed), "stream_obv", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    feed=_closes_with_volume,
+    output="pair string, bucket timestamp, obv bigint",
+    state="prev_close double, obv bigint",
+    init=(None, 0),
+    step=_obv_step,
+    finish=_by("pair", "bucket"),
+))
 
 
 # ------------------------------------------ streaming Cutler's RSI
 
-CRSI_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("pair", StringType()),
-        StructField("bucket", TimestampType()),
-        StructField("rsi", DoubleType()),
-    ]
-)
 
-# prev_close + a ring of the last RSI_N (gain, loss) deltas.
-CRSI_STATE_SCHEMA = StructType(
-    [
-        StructField("prev_close", DoubleType()),
-        StructField("gains", ArrayType(DoubleType())),
-        StructField("losses", ArrayType(DoubleType())),
-    ]
-)
-
-
-def _update_rsi_cutler(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import RSI_N
-
-    (pair,) = key
-    if state.exists:
-        prev_close, gains, losses = state.get
-        gains, losses = list(gains), list(losses)
-    else:
-        prev_close, gains, losses = None, [], []
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
-    out: dict[str, list] = {"bucket": [], "rsi": []}
-    for bucket, close in zip(rows["bucket"], rows["close"]):
-        close = float(close)
-        if prev_close is None:
-            prev_close = close
-            continue
-        d = _rhalf(close - prev_close)
-        prev_close = close
-        gains.append(max(d, 0.0))
-        losses.append(max(-d, 0.0))
-        if len(gains) > RSI_N:
-            gains.pop(0)
-            losses.pop(0)
-        if len(gains) < RSI_N:
-            continue
-        # the batch form's windowed DECIMAL sums, cast back to double
-        sg = float(sum((_dquant(g) for g in gains), Decimal(0)))
-        sl = float(sum((_dquant(x) for x in losses), Decimal(0)))
-        rsi = 100.0 if sl == 0 else _r6(100.0 - 100.0 / (1.0 + sg / sl))
-        out["bucket"].append(bucket)
-        out["rsi"].append(rsi)
-
-    state.update((prev_close, gains, losses))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
+def _rsi_cutler_step(s: tuple, bar: Any) -> tuple[tuple, Iterable[tuple]]:
+    prev_close, gains, losses = s
+    close = float(bar.close)
+    if prev_close is None:
+        return (close, gains, losses), ()
+    d = _rhalf(close - prev_close)
+    gains = [*gains, max(d, 0.0)][-RSI_N:]
+    losses = [*losses, max(-d, 0.0)][-RSI_N:]
+    if len(gains) < RSI_N:
+        return (close, gains, losses), ()
+    # the batch form's windowed DECIMAL sums, cast back to double
+    sg = float(sum((_dquant(g) for g in gains), Decimal(0)))
+    sl = float(sum((_dquant(x) for x in losses), Decimal(0)))
+    rsi = 100.0 if sl == 0 else _r6(100.0 - 100.0 / (1.0 + sg / sl))
+    return (close, gains, losses), ((bar.bucket, rsi),)
 
 
-def rsi_cutler_stream(closes: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, close) rows -> Cutler-RSI rows.
-    ``closes`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return closes.groupBy("pair").applyInPandasWithState(
-        _update_rsi_cutler,
-        outputStructType=CRSI_OUTPUT_SCHEMA,
-        stateStructType=CRSI_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-@register(
-    "stream_rsi_cutler",
+stream_rsi_cutler = _twin(Twin(
+    name="stream_rsi_cutler",
     rotation_group=10,
     oracle=SQL_RSI_CUTLER,
     doc="Cutler's RSI as per-pair applyInPandasWithState: prev_close "
@@ -1525,77 +1010,48 @@ def rsi_cutler_stream(closes: DataFrame) -> DataFrame:
         "streaming twin sharing its oracle.  streamed == batch == "
         "SQL_RSI_CUTLER row-for-row.",
     tags=("streaming", "stateful", "window"),
-)
-def stream_rsi_cutler(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_closes
-
-    stream_dir = _write_ordered_slices(_hourly_closes(spark, sf_dir))
-    closes = (
-        spark.readStream.schema("pair string, bucket timestamp, close double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        rsi_cutler_stream(closes), "stream_rsi_cutler", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    feed=_hourly_closes,
+    output="pair string, bucket timestamp, rsi double",
+    # prev_close + a ring of the last RSI_N (gain, loss) deltas.
+    state="prev_close double, gains array<double>, losses array<double>",
+    init=(None, [], []),
+    step=_rsi_cutler_step,
+    finish=_by("pair", "bucket"),
+))
 
 
 # ------------------------------- streaming max drawdown (update mode)
 
-MDD_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("pair", StringType()),
-        StructField("n_hours", LongType()),
-        StructField("max_drawdown", DoubleType()),
-    ]
-)
 
-MDD_STATE_SCHEMA = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("peak", DoubleType()),
-        StructField("min_dd", DoubleType()),
-    ]
-)
+def _max_drawdown_step(s: tuple, bar: Any) -> tuple[tuple, Iterable[tuple]]:
+    n, peak, min_dd = s
+    close = float(bar.close)
+    peak = close if peak is None else max(peak, close)
+    dd = _rhalf(close / peak - 1)
+    return (n + 1, peak, dd if min_dd is None else min(min_dd, dd)), ()
 
 
-def _update_max_drawdown(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    (pair,) = key
-    n, peak, min_dd = state.get if state.exists else (0, None, None)
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
-    for close in rows["close"]:
-        close = float(close)
-        peak = close if peak is None else max(peak, close)
-        dd = _rhalf(close / peak - 1)
-        min_dd = dd if min_dd is None else min(min_dd, dd)
-        n += 1
-
-    state.update((n, peak, min_dd))
+def _max_drawdown_revision(s: tuple) -> Iterable[tuple]:
     # ONE aggregate row per (pair, micro-batch): the current running
     # answer -- update-mode semantics, not per-bar emission.
-    yield pd.DataFrame(
-        {"pair": [pair], "n_hours": [n], "max_drawdown": [_r6(min_dd)]}
+    n, _, min_dd = s
+    return ((n, _r6(min_dd)),)
+
+
+def _last_drawdown(drained: DataFrame) -> DataFrame:
+    # each pair's last revision == the final aggregate
+    return (
+        drained.groupBy("pair")
+        .agg(
+            F.max("n_hours").alias("n_hours"),
+            F.max_by("max_drawdown", "n_hours").alias("max_drawdown"),
+        )
+        .orderBy("pair")
     )
 
 
-def max_drawdown_stream(closes: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, close) rows -> one running
-    (n_hours, max_drawdown) aggregate row per pair per micro-batch."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return closes.groupBy("pair").applyInPandasWithState(
-        _update_max_drawdown,
-        outputStructType=MDD_OUTPUT_SCHEMA,
-        stateStructType=MDD_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-@register(
-    "stream_max_drawdown",
+stream_max_drawdown = _twin(Twin(
+    name="stream_max_drawdown",
     rotation_group=10,
     oracle=SQL_MAX_DRAWDOWN,
     doc="Maximum drawdown as an UPDATE-mode streaming aggregate -- the "
@@ -1612,111 +1068,37 @@ def max_drawdown_stream(closes: DataFrame) -> DataFrame:
         "exactly, one 6-dp round at emission).  streamed == batch == "
         "the shared SQL_MAX_DRAWDOWN oracle.",
     tags=("streaming", "stateful", "window"),
-)
-def stream_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_closes
-
-    stream_dir = _write_ordered_slices(_hourly_closes(spark, sf_dir))
-    closes = (
-        spark.readStream.schema("pair string, bucket timestamp, close double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    drained = run_to_memory(
-        max_drawdown_stream(closes), "stream_max_drawdown", "update", state_partitions=FEW_KEY_STATE_PARTITIONS)
-    # each pair's last revision == the final aggregate
-    return (
-        drained.groupBy("pair")
-        .agg(
-            F.max("n_hours").alias("n_hours"),
-            F.max_by("max_drawdown", "n_hours").alias("max_drawdown"),
-        )
-        .orderBy("pair")
-    )
+    feed=_hourly_closes,
+    output="pair string, n_hours bigint, max_drawdown double",
+    state="n bigint, peak double, min_dd double",
+    init=(0, None, None),
+    step=_max_drawdown_step,
+    revise=_max_drawdown_revision,
+    finish=_last_drawdown,
+))
 
 
 # --------------------------------------- streaming Donchian channels
 
-DC_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("pair", StringType()),
-        StructField("bucket", TimestampType()),
-        StructField("close", DoubleType()),
-        StructField("upper", DoubleType()),
-        StructField("lower", DoubleType()),
-        StructField("mid", DoubleType()),
-        StructField("breakout_up", BooleanType()),
-        StructField("breakout_down", BooleanType()),
-    ]
-)
 
-# Ring of the last DC_N (high, low) extremes per pair -- two parallel
-# double arrays, bounded by live pairs x DC_N, never by history.
-DC_STATE_SCHEMA = StructType(
-    [
-        StructField("highs", ArrayType(DoubleType())),
-        StructField("lows", ArrayType(DoubleType())),
-    ]
-)
+def _donchian_step(s: tuple, bar: Any) -> tuple[tuple, Iterable[tuple]]:
+    highs, lows = s
+    high, low, close = float(bar.high), float(bar.low), float(bar.close)
+    # The batch frame is ROWS BETWEEN DC_N PRECEDING AND 1
+    # PRECEDING: score the CURRENT bar against the ring BEFORE
+    # pushing it, emitting only once the lookback is full.
+    rows: tuple[tuple, ...] = ()
+    if len(highs) == DC_N:
+        upper, lower = max(highs), min(lows)
+        rows = ((
+            bar.bucket, close, upper, lower, (upper + lower) / 2,
+            close > upper, close < lower,
+        ),)
+    return ([*highs, high][-DC_N:], [*lows, low][-DC_N:]), rows
 
 
-def _update_donchian(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import DC_N
-
-    (pair,) = key
-    highs: list[float] = list(state.get[0]) if state.exists else []
-    lows: list[float] = list(state.get[1]) if state.exists else []
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
-    out: dict[str, list] = {
-        "bucket": [], "close": [], "upper": [], "lower": [],
-        "mid": [], "breakout_up": [], "breakout_down": [],
-    }
-    for bucket, high, low, close in zip(
-        rows["bucket"], rows["high"], rows["low"], rows["close"]
-    ):
-        high, low, close = float(high), float(low), float(close)
-        # The batch frame is ROWS BETWEEN DC_N PRECEDING AND 1
-        # PRECEDING: score the CURRENT bar against the ring BEFORE
-        # pushing it, emitting only once the lookback is full.
-        if len(highs) == DC_N:
-            upper = max(highs)
-            lower = min(lows)
-            out["bucket"].append(bucket)
-            out["close"].append(close)
-            out["upper"].append(upper)
-            out["lower"].append(lower)
-            out["mid"].append((upper + lower) / 2)
-            out["breakout_up"].append(close > upper)
-            out["breakout_down"].append(close < lower)
-        highs.append(high)
-        lows.append(low)
-        if len(highs) > DC_N:
-            highs.pop(0)
-            lows.pop(0)
-
-    state.update((highs, lows))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
-
-
-def donchian_stream(bars: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, high, low, close) OHLC bars -> Donchian
-    channel rows.  ``bars`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bars.groupBy("pair").applyInPandasWithState(
-        _update_donchian,
-        outputStructType=DC_OUTPUT_SCHEMA,
-        stateStructType=DC_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-@register(
-    "stream_donchian_channels",
+stream_donchian_channels = _twin(Twin(
+    name="stream_donchian_channels",
     rotation_group=11,
     oracle=SQL_DONCHIAN,
     doc="Donchian channels as per-pair applyInPandasWithState -- the "
@@ -1729,117 +1111,51 @@ def donchian_stream(bars: DataFrame) -> DataFrame:
         "halve), so streamed == batch == the shared SQL_DONCHIAN "
         "oracle with no rounding discipline at all.",
     tags=("streaming", "stateful", "window"),
-)
-def stream_donchian_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_ohlc
-
-    stream_dir = _write_ordered_slices(_hourly_ohlc(spark, sf_dir))
-    bars = (
-        spark.readStream.schema(
-            "pair string, bucket timestamp, high double, low double, "
-            "close double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        donchian_stream(bars), "stream_donchian_channels", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    feed=_hourly_ohlc,
+    output="pair string, bucket timestamp, close double, upper double, "
+           "lower double, mid double, breakout_up boolean, "
+           "breakout_down boolean",
+    # Ring of the last DC_N (high, low) extremes per pair -- two
+    # parallel double arrays, bounded by live pairs x DC_N, never by
+    # history.
+    state="highs array<double>, lows array<double>",
+    init=([], []),
+    step=_donchian_step,
+    finish=_by("pair", "bucket"),
+))
 
 
 # ----------------------------------- streaming rolling z-score alerts
 
-ZS_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("event_type", StringType()),
-        StructField("bucket_start", TimestampType()),
-        StructField("n", LongType()),
-        StructField("baseline_hours", LongType()),
-        StructField("z", DoubleType()),
-        StructField("is_anomaly", BooleanType()),
-    ]
-)
 
-# Trailing (hour_idx, count) pairs inside the baseline horizon -- two
-# parallel long arrays, at most BASELINE_HOURS entries per event type.
-ZS_STATE_SCHEMA = StructType(
-    [
-        StructField("idxs", ArrayType(LongType())),
-        StructField("counts", ArrayType(LongType())),
-    ]
-)
-
-
-def _update_rolling_zscore(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    import math
-
-    from ..operators.anomaly import BASELINE_HOURS, Z_THRESHOLD
-
-    (event_type,) = key
-    idxs: list[int] = list(state.get[0]) if state.exists else []
-    counts: list[int] = list(state.get[1]) if state.exists else []
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("hour_idx")
-    out: dict[str, list] = {
-        "bucket_start": [], "n": [], "baseline_hours": [],
-        "z": [], "is_anomaly": [],
-    }
-    for bucket_start, hour_idx, n in zip(
-        rows["bucket_start"], rows["hour_idx"], rows["n"]
-    ):
-        hour_idx, n = int(hour_idx), int(n)
-        # Evict entries that fell out of the RANGE frame
-        # [hour_idx - BASELINE_HOURS, hour_idx - 1]; gaps in the
-        # series shrink the baseline exactly as the batch RANGE
-        # frame does (distance is in hour INDEX, not row count).
-        while idxs and idxs[0] < hour_idx - BASELINE_HOURS:
-            idxs.pop(0)
-            counts.pop(0)
-        b_n = len(idxs)
-        z = None
-        if b_n >= 2:
-            # The batch form's exact arithmetic: integer sums, then
-            # a fixed IEEE op sequence (divide, multiply-subtract,
-            # sqrt), rounded once at 6 dp.
-            b_sum = sum(counts)
-            b_sum2 = sum(c * c for c in counts)
-            mean = float(b_sum) / b_n
-            var = float(b_sum2) / b_n - mean * mean
-            if var > 0:
-                z = _r6((float(n) - mean) / math.sqrt(var))
-        out["bucket_start"].append(bucket_start)
-        out["n"].append(n)
-        out["baseline_hours"].append(b_n)
-        out["z"].append(z)
-        out["is_anomaly"].append(
-            abs(z) > Z_THRESHOLD if z is not None else False
-        )
-        idxs.append(hour_idx)
-        counts.append(n)
-
-    state.update((idxs, counts))
-    yield pd.DataFrame(
-        {"event_type": [event_type] * len(out["n"]), **out}
-    )
+def _rolling_zscore_step(s: tuple, bar: Any) -> tuple[tuple, Iterable[tuple]]:
+    idxs, counts = s
+    hour_idx, n = int(bar.hour_idx), int(bar.n)
+    # Evict entries that fell out of the RANGE frame
+    # [hour_idx - BASELINE_HOURS, hour_idx - 1]; gaps in the
+    # series shrink the baseline exactly as the batch RANGE
+    # frame does (distance is in hour INDEX, not row count).
+    k = bisect.bisect_left(idxs, hour_idx - BASELINE_HOURS)
+    idxs, counts = idxs[k:], counts[k:]
+    b_n = len(idxs)
+    z = None
+    if b_n >= 2:
+        # The batch form's exact arithmetic: integer sums, then
+        # a fixed IEEE op sequence (divide, multiply-subtract,
+        # sqrt), rounded once at 6 dp.
+        b_sum = sum(counts)
+        b_sum2 = sum(c * c for c in counts)
+        mean = float(b_sum) / b_n
+        var = float(b_sum2) / b_n - mean * mean
+        if var > 0:
+            z = _r6((float(n) - mean) / math.sqrt(var))
+    is_anomaly = abs(z) > Z_THRESHOLD if z is not None else False
+    row = (bar.bucket_start, n, b_n, z, is_anomaly)
+    return ([*idxs, hour_idx], [*counts, n]), (row,)
 
 
-def rolling_zscore_stream(series: DataFrame) -> DataFrame:
-    """Streaming (event_type, bucket_start, hour_idx, n) series rows ->
-    rolling z-score rows.  ``series`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return series.groupBy("event_type").applyInPandasWithState(
-        _update_rolling_zscore,
-        outputStructType=ZS_OUTPUT_SCHEMA,
-        stateStructType=ZS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-@register(
-    "stream_rolling_zscore",
+stream_rolling_zscore = _twin(Twin(
+    name="stream_rolling_zscore",
     rotation_group=11,
     oracle=SQL_ROLLING_ZSCORE,
     doc="Rolling z-score anomaly alerts as per-event-type "
@@ -1856,97 +1172,49 @@ def rolling_zscore_stream(series: DataFrame) -> DataFrame:
         "sequence, one 6-dp round.  streamed == batch == the shared "
         "SQL_ROLLING_ZSCORE oracle row-for-row.",
     tags=("streaming", "stateful", "anomaly"),
-)
-def stream_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.anomaly import hourly_event_series
-
-    stream_dir = _write_ordered_slices(
-        hourly_event_series(spark, sf_dir), order_col="bucket_start"
-    )
-    series = (
-        spark.readStream.schema(
-            "event_type string, bucket_start timestamp, hour_idx bigint, "
-            "n bigint"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        rolling_zscore_stream(series), "stream_rolling_zscore", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("event_type", "bucket_start")
+    feed=hourly_event_series,
+    key="event_type",
+    # bucket_start is unique per event type and hour_idx is its epoch
+    # hour, so this one column orders both the slices and the batch.
+    order=("bucket_start",),
+    output="event_type string, bucket_start timestamp, n bigint, "
+           "baseline_hours bigint, z double, is_anomaly boolean",
+    # Trailing (hour_idx, count) pairs inside the baseline horizon --
+    # two parallel long arrays, at most BASELINE_HOURS entries per
+    # event type.
+    state="idxs array<bigint>, counts array<bigint>",
+    init=([], []),
+    step=_rolling_zscore_step,
+    finish=_by("event_type", "bucket_start"),
+))
 
 
 # ---------------------------------- streaming gap interpolation
 
-GI_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("pair", StringType()),
-        StructField("bucket", TimestampType()),
-        StructField("close", DoubleType()),
-        StructField("is_interpolated", BooleanType()),
-    ]
-)
 
-# Just the previous REAL bar: interpolation of a gap needs nothing
-# else, because the gap's rows are emitted the moment the bar that
-# CLOSES it arrives -- the repair-on-close streaming shape.
-GI_STATE_SCHEMA = StructType(
-    [
-        StructField("prev_bucket", TimestampType()),
-        StructField("prev_close", DoubleType()),
-    ]
-)
-
-
-def _update_gap_interpolation(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import DD_ROUND
-
-    (pair,) = key
-    prev_bucket, prev_close = (
-        state.get if state.exists else (None, None)
-    )
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
-    out: dict[str, list] = {"bucket": [], "close": [], "is_interpolated": []}
-    for bucket, close in zip(rows["bucket"], rows["close"]):
-        close = float(close)
-        if prev_bucket is not None:
-            den = int((bucket - prev_bucket).total_seconds()) // 3600
-            for k in range(1, den):
-                # the batch form's exact arithmetic: integer hour
-                # ratio, one fused IEEE sequence, one DD_ROUND round
-                w = float(k) / den
-                out["bucket"].append(prev_bucket + pd.Timedelta(hours=k))
-                out["close"].append(
-                    _rhalf(prev_close + (close - prev_close) * w)
-                )
-                out["is_interpolated"].append(True)
-        out["bucket"].append(bucket)
-        out["close"].append(close)
-        out["is_interpolated"].append(False)
-        prev_bucket, prev_close = bucket, close
-
-    state.update((prev_bucket, prev_close))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
+def _gap_interpolation_step(
+    s: tuple, bar: Any
+) -> tuple[tuple, Iterable[tuple]]:
+    prev_bucket, prev_close = s
+    bucket, close = bar.bucket, float(bar.close)
+    rows = []
+    if prev_bucket is not None:
+        den = int((bucket - prev_bucket).total_seconds()) // 3600
+        for k in range(1, den):
+            # the batch form's exact arithmetic: integer hour
+            # ratio, one fused IEEE sequence, one DD_ROUND round
+            w = float(k) / den
+            rows.append((
+                prev_bucket + pd.Timedelta(hours=k),
+                _rhalf(prev_close + (close - prev_close) * w),
+                True,
+            ))
+    rows.append((bucket, close, False))
+    return (bucket, close), rows
 
 
-def gap_interpolation_stream(bars: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, close) REAL bars -> the complete
-    repaired series.  ``bars`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bars.groupBy("pair").applyInPandasWithState(
-        _update_gap_interpolation,
-        outputStructType=GI_OUTPUT_SCHEMA,
-        stateStructType=GI_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-@register(
-    "stream_gap_interpolation",
+stream_gap_interpolation = _twin(Twin(
+    name="stream_gap_interpolation",
     rotation_group=11,
     oracle=SQL_GAP_INTERPOLATION,
     doc="Gap repair as per-pair applyInPandasWithState -- the repair-"
@@ -1962,140 +1230,85 @@ def gap_interpolation_stream(bars: DataFrame) -> DataFrame:
         "construction on both forms (the batch spine spans min..max "
         "real bucket; the stream starts at the first real bar).",
     tags=("streaming", "stateful", "window"),
-)
-def stream_gap_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream_dir = _write_ordered_slices(_hourly_closes(spark, sf_dir))
-    bars = (
-        spark.readStream.schema("pair string, bucket timestamp, close double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        gap_interpolation_stream(bars), "stream_gap_interpolation", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    feed=_hourly_closes,
+    output="pair string, bucket timestamp, close double, "
+           "is_interpolated boolean",
+    # Just the previous REAL bar: interpolation of a gap needs nothing
+    # else, because the gap's rows are emitted the moment the bar that
+    # CLOSES it arrives -- the repair-on-close streaming shape.
+    state="prev_bucket timestamp, prev_close double",
+    init=(None, None),
+    step=_gap_interpolation_step,
+    finish=_by("pair", "bucket"),
+))
 
 
 # ------------------------------------ streaming dollar bars (update)
 
-DB_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("pair", StringType()),
-        StructField("bar_id", LongType()),
-        StructField("start_ts", TimestampType()),
-        StructField("end_ts", TimestampType()),
-        StructField("open", DoubleType()),
-        StructField("high", DoubleType()),
-        StructField("low", DoubleType()),
-        StructField("close", DoubleType()),
-        StructField("base_volume", DoubleType()),
-        StructField("dollar_volume", DoubleType()),
-        StructField("n_trades", LongType()),
-    ]
-)
 
-# The OPEN bar's accumulators + the running notional cumsum -- closed
-# bars leave state the moment they close.  Exact volume accumulation
-# carries the decimal sums as STRINGS (Arrow state round-trips doubles,
-# but the dsum contract is exact decimal addition, so the state keeps
-# the decimal text).
-DB_STATE_SCHEMA = StructType(
-    [
-        StructField("cum_prev", LongType()),
-        StructField("bar_id", LongType()),
-        StructField("start_ts", TimestampType()),
-        StructField("end_ts", TimestampType()),
-        StructField("open", DoubleType()),
-        StructField("high", DoubleType()),
-        StructField("low", DoubleType()),
-        StructField("close", DoubleType()),
-        StructField("base_sum", StringType()),
-        StructField("dollar_sum", StringType()),
-        StructField("n_trades", LongType()),
-    ]
-)
-
-_QUANT6 = Decimal(1).scaleb(-6)
-
-
-def _d6(x: float) -> Decimal:
-    """Spark's CAST(double AS DECIMAL(38,6)): shortest repr, HALF_UP."""
-    return Decimal(repr(x)).quantize(_QUANT6, rounding=ROUND_HALF_UP)
-
-
-def _update_dollar_bars(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import _DB_T_MICRO
-
-    (pair,) = key
-    if state.exists:
-        (cum_prev, bar_id, start_ts, end_ts, op, hi, lo, cl,
-         base_sum, dollar_sum, n) = state.get
-        base_sum, dollar_sum = Decimal(base_sum), Decimal(dollar_sum)
-    else:
-        cum_prev, bar_id, n = 0, None, 0
-        start_ts = end_ts = op = hi = lo = cl = None
-        base_sum = dollar_sum = Decimal(0)
-
-    out: list[dict] = []
-
-    def _bar_row() -> dict:
-        return {
-            "pair": pair, "bar_id": bar_id,
-            "start_ts": start_ts, "end_ts": end_ts,
-            "open": op, "high": hi, "low": lo, "close": cl,
-            "base_volume": float(base_sum),
-            "dollar_volume": float(dollar_sum),
-            "n_trades": n,
-        }
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values(
-        ["ts", "event_id"]
-    )
-    for ts, value, counter_value in zip(
-        rows["ts"], rows["value"], rows["counter_value"]
-    ):
-        value, counter_value = float(value), float(counter_value)
-        notional_micro = int(_d6(counter_value) * 1_000_000)
-        this_bar = cum_prev // _DB_T_MICRO
-        if bar_id is not None and this_bar != bar_id:
-            out.append(_bar_row())  # the bar just CLOSED: final revision
-            bar_id, n = None, 0
-            base_sum = dollar_sum = Decimal(0)
-        if bar_id is None:
-            bar_id, start_ts, op, hi, lo = this_bar, ts, value, value, value
-        cum_prev += notional_micro
-        end_ts, cl = ts, value
-        hi, lo = max(hi, value), min(lo, value)
-        base_sum += _d6(value)
-        dollar_sum += _d6(counter_value)
-        n += 1
-    if bar_id is not None:
-        out.append(_bar_row())  # the open bar's running revision
-
-    state.update((
-        cum_prev, bar_id, start_ts, end_ts, op, hi, lo, cl,
-        str(base_sum), str(dollar_sum), n,
-    ))
-    yield pd.DataFrame(out, columns=[f.name for f in DB_OUTPUT_SCHEMA])
-
-
-def dollar_bars_stream(trades: DataFrame) -> DataFrame:
-    """Streaming (pair, ts, event_id, value, counter_value) trades ->
-    dollar-bar revisions (update mode: closed bars final, the open bar
-    revised per micro-batch)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return trades.groupBy("pair").applyInPandasWithState(
-        _update_dollar_bars,
-        outputStructType=DB_OUTPUT_SCHEMA,
-        stateStructType=DB_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+def _trades(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _with_legs(load_table(spark, sf_dir, "events")).select(
+        F.col("event_type").alias("pair"),
+        "ts",
+        "event_id",
+        "value",
+        "counter_value",
     )
 
 
-@register(
-    "stream_dollar_bars",
+def _dollar_bar_revision(s: tuple) -> Iterable[tuple]:
+    """The open bar's row (nothing when no bar is open)."""
+    _, bar_id, start_ts, end_ts, op, hi, lo, cl, base_sum, dollar_sum, n = s
+    if bar_id is None:
+        return ()
+    return ((
+        bar_id, start_ts, end_ts, op, hi, lo, cl,
+        float(Decimal(base_sum)), float(Decimal(dollar_sum)), n,
+    ),)
+
+
+def _dollar_bars_step(s: tuple, bar: Any) -> tuple[tuple, Iterable[tuple]]:
+    (cum_prev, bar_id, start_ts, _, op, hi, lo, _,
+     base_sum, dollar_sum, n) = s
+    ts, value = bar.ts, float(bar.value)
+    counter_value = float(bar.counter_value)
+    notional_micro = int(_d6(counter_value) * 1_000_000)
+    this_bar = cum_prev // _DB_T_MICRO
+    rows: Iterable[tuple] = ()
+    if bar_id is not None and this_bar != bar_id:
+        rows = _dollar_bar_revision(s)  # the bar just CLOSED: final revision
+        bar_id, n, base_sum, dollar_sum = None, 0, "0", "0"
+    if bar_id is None:
+        bar_id, start_ts, op, hi, lo = this_bar, ts, value, value, value
+    return (
+        cum_prev + notional_micro, bar_id, start_ts, ts, op,
+        max(hi, value), min(lo, value), value,
+        str(Decimal(base_sum) + _d6(value)),
+        str(Decimal(dollar_sum) + _d6(counter_value)),
+        n + 1,
+    ), rows
+
+
+def _last_bar_revision(drained: DataFrame) -> DataFrame:
+    return (
+        drained.groupBy("pair", "bar_id")
+        .agg(
+            F.max_by("start_ts", "n_trades").alias("start_ts"),
+            F.max_by("end_ts", "n_trades").alias("end_ts"),
+            F.max_by("open", "n_trades").alias("open"),
+            F.max_by("high", "n_trades").alias("high"),
+            F.max_by("low", "n_trades").alias("low"),
+            F.max_by("close", "n_trades").alias("close"),
+            F.max_by("base_volume", "n_trades").alias("base_volume"),
+            F.max_by("dollar_volume", "n_trades").alias("dollar_volume"),
+            F.max("n_trades").alias("n_trades"),
+        )
+        .orderBy("pair", "bar_id")
+    )
+
+
+stream_dollar_bars = _twin(Twin(
+    name="stream_dollar_bars",
     rotation_group=11,
     oracle=SQL_DOLLAR_BARS,
     doc="Dollar bars as an UPDATE-mode stateful twin: state is ONLY "
@@ -2112,42 +1325,31 @@ def dollar_bars_stream(trades: DataFrame) -> DataFrame:
         "accumulate as exact Decimals carried through state as text.  "
         "streamed == batch == the shared SQL_DOLLAR_BARS oracle.",
     tags=("streaming", "stateful", "aggregation"),
-)
-def stream_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _with_legs
-    from ..sources.catalog import load_table
+    feed=_trades,
+    order=("ts", "event_id"),
+    output="pair string, bar_id bigint, start_ts timestamp, "
+           "end_ts timestamp, open double, high double, low double, "
+           "close double, base_volume double, dollar_volume double, "
+           "n_trades bigint",
+    # The OPEN bar's accumulators + the running notional cumsum --
+    # closed bars leave state the moment they close.  Exact volume
+    # accumulation carries the decimal sums as STRINGS (Arrow state
+    # round-trips doubles, but the dsum contract is exact decimal
+    # addition, so the state keeps the decimal text).
+    state="cum_prev bigint, bar_id bigint, start_ts timestamp, "
+          "end_ts timestamp, open double, high double, low double, "
+          "close double, base_sum string, dollar_sum string, "
+          "n_trades bigint",
+    init=(0, None, None, None, None, None, None, None, "0", "0", 0),
+    step=_dollar_bars_step,
+    revise=_dollar_bar_revision,
+    finish=_last_bar_revision,
+))
 
-    e = load_table(spark, sf_dir, "events")
-    trades = _with_legs(e).select(
-        F.col("event_type").alias("pair"),
-        "ts",
-        "event_id",
-        "value",
-        "counter_value",
-    )
-    stream_dir = _write_ordered_slices(trades, order_col=["ts", "event_id"])
-    src = (
-        spark.readStream.schema(
-            "pair string, ts timestamp, event_id bigint, value double, "
-            "counter_value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    drained = run_to_memory(
-        dollar_bars_stream(src), "stream_dollar_bars", "update", state_partitions=FEW_KEY_STATE_PARTITIONS)
-    return (
-        drained.groupBy("pair", "bar_id")
-        .agg(
-            F.max_by("start_ts", "n_trades").alias("start_ts"),
-            F.max_by("end_ts", "n_trades").alias("end_ts"),
-            F.max_by("open", "n_trades").alias("open"),
-            F.max_by("high", "n_trades").alias("high"),
-            F.max_by("low", "n_trades").alias("low"),
-            F.max_by("close", "n_trades").alias("close"),
-            F.max_by("base_volume", "n_trades").alias("base_volume"),
-            F.max_by("dollar_volume", "n_trades").alias("dollar_volume"),
-            F.max("n_trades").alias("n_trades"),
-        )
-        .orderBy("pair", "bar_id")
-    )
+
+# The FakeState-driven unit tests call these updaters directly.
+_update_bollinger = TWINS["stream_bollinger_bands"].update
+_update_keltner = TWINS["stream_keltner_channels"].update
+_update_donchian = TWINS["stream_donchian_channels"].update
+_update_rolling_zscore = TWINS["stream_rolling_zscore"].update
+_update_ichimoku = TWINS["stream_ichimoku"].update

@@ -31,6 +31,7 @@ upstream feed).
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 from collections.abc import Iterator
 from decimal import Decimal
@@ -381,5 +382,9 @@ def stream_stateful_account_buckets(spark: SparkSession, sf_dir: str) -> DataFra
     # corpus (38.9 s vs 65.3 s at 2 files/trigger -- SCALE.md round-12
     # note).  This twin is KEY-HEAVY (accounts x days), so its cost is
     # per-key Python work; it keeps the session's 32 state partitions
-    # (narrowing to 8 starved the cores: 86.5 s).
-    return run_buckets_stream(spark, d, name)
+    # (narrowing to 8 starved the cores: 86.5 s).  The drain is a
+    # driver-local relation, so the feed copy is dead once it returns.
+    try:
+        return run_buckets_stream(spark, d, name)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
