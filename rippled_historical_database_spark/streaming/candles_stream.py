@@ -22,37 +22,14 @@ Kafka + a transactional table, nothing else changes.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import sql_dsum
 from ..plans.registry import register
-from ..sources.catalog import events_read_schema, normalize_events_ts
-from .memory_sink import run_to_memory
+from .memory_sink import run_to_memory, table_stream
 
 LATE_DATA_WATERMARK = "2 hours"  # exchanges.js:52 late-data window
-
-
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The file streaming source lists a directory, non-recursively.  A
-    # Spark-written events.parquet IS a directory of part files --
-    # stream it as-is (symlinking the directory under another dir would
-    # stream ZERO rows, silently); a single-file table (the generated
-    # testdata shape) gets symlinked into a temp dir.
-    src = os.path.join(sf_dir, "events.parquet")
-    schema, shim = events_read_schema(src)
-    if os.path.isdir(src):
-        raw = spark.readStream.schema(schema).parquet(src)
-        return normalize_events_ts(raw, shim)
-    d = tempfile.mkdtemp(prefix="events_stream_")
-    link = os.path.join(d, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    raw = spark.readStream.schema(schema).parquet(d)
-    return normalize_events_ts(raw, shim)
 
 
 @register(
@@ -75,21 +52,22 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming",),
 )
 def stream_candles_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _events_stream(spark, sf_dir)
-    agg = (
-        events.withWatermark("ts", LATE_DATA_WATERMARK)
-        .groupBy(
-            F.col("event_type").alias("pair"),
-            F.window("ts", "1 hour").alias("w"),
+    with table_stream(spark, sf_dir, "events") as events:
+        agg = (
+            events.withWatermark("ts", LATE_DATA_WATERMARK)
+            .groupBy(
+                F.col("event_type").alias("pair"),
+                F.window("ts", "1 hour").alias("w"),
+            )
+            .agg(
+                F.count("*").alias("n_trades"),
+                F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("base_volume"),
+                F.max("value").alias("high"),
+                F.min("value").alias("low"),
+            )
         )
-        .agg(
-            F.count("*").alias("n_trades"),
-            F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("base_volume"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-        )
-    )
-    return run_to_memory(agg, "stream_candles_hourly", "complete").select(
+        drained = run_to_memory(agg, "stream_candles_hourly", "complete")
+    return drained.select(
         "pair",
         F.col("w.start").alias("bucket_start"),
         "n_trades",
@@ -115,11 +93,12 @@ def stream_candles_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming",),
 )
 def stream_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _events_stream(spark, sf_dir)
-    filtered = (
-        events.filter((F.col("event_type") == "purchase") & (F.col("event_id") % 100 < 3))
-        .withWatermark("ts", LATE_DATA_WATERMARK)
-        .dropDuplicates(["event_id"])
-        .select("event_id", "ts", "user_id", "value")
-    )
-    return run_to_memory(filtered, "stream_dedup", "append").orderBy("event_id")
+    with table_stream(spark, sf_dir, "events") as events:
+        filtered = (
+            events.filter((F.col("event_type") == "purchase") & (F.col("event_id") % 100 < 3))
+            .withWatermark("ts", LATE_DATA_WATERMARK)
+            .dropDuplicates(["event_id"])
+            .select("event_id", "ts", "user_id", "value")
+        )
+        drained = run_to_memory(filtered, "stream_dedup", "append")
+    return drained.orderBy("event_id")

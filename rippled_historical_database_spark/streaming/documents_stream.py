@@ -19,9 +19,6 @@ time if the corpus is unbounded.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,23 +31,7 @@ from pyspark.sql.types import (
 
 from ..operators.multimodal import SQL_PHASH_NEARDUP
 from ..plans.registry import register
-from .memory_sink import run_to_memory
-
-
-def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The file streaming source lists a directory, non-recursively.  A
-    # Spark-written documents.parquet IS a directory of part files --
-    # stream it as-is; a single-file table (the generated testdata
-    # shape) gets symlinked into a temp dir.
-    src = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(src).schema
-    if os.path.isdir(src):
-        return spark.readStream.schema(schema).parquet(src)
-    d = tempfile.mkdtemp(prefix="documents_stream_")
-    link = os.path.join(d, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    return spark.readStream.schema(schema).parquet(d)
+from .memory_sink import run_to_memory, table_stream
 
 
 @register(
@@ -89,17 +70,16 @@ def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_document_dedup_registry(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    docs = _documents_stream(spark, sf_dir)
-    kept = docs.filter(
-        F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+")) >= 10
-    ).select("doc_id", F.md5(F.col("text").cast("binary")).alias("content_md5"))
-    agg = kept.groupBy("content_md5").agg(
-        F.min("doc_id").alias("first_doc_id"),
-        F.count("*").alias("n_copies"),
-    )
-    return run_to_memory(agg, "stream_doc_registry", "complete").orderBy(
-        "content_md5"
-    )
+    with table_stream(spark, sf_dir, "documents") as docs:
+        kept = docs.filter(
+            F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+")) >= 10
+        ).select("doc_id", F.md5(F.col("text").cast("binary")).alias("content_md5"))
+        agg = kept.groupBy("content_md5").agg(
+            F.min("doc_id").alias("first_doc_id"),
+            F.count("*").alias("n_copies"),
+        )
+        drained = run_to_memory(agg, "stream_doc_registry", "complete")
+    return drained.orderBy("content_md5")
 
 
 # -------------------------- incremental perceptual-hash near-dup pairs
@@ -202,24 +182,24 @@ def phash_pair_stream(bands: DataFrame) -> DataFrame:
     tags=("streaming", "multimodal", "dedup"),
 )
 def stream_phash_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _documents_stream(spark, sf_dir)
     ph = (
         F.conv(F.substring(F.md5(F.col("text").cast("binary")), 1, 15), 16, 10)
         .cast("long")
         .alias("ph")
     )
-    bands = (
-        docs.select("doc_id", ph)
-        .select(
-            "doc_id",
-            "ph",
-            F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("band"),
+    with table_stream(spark, sf_dir, "documents") as docs:
+        bands = (
+            docs.select("doc_id", ph)
+            .select(
+                "doc_id",
+                "ph",
+                F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("band"),
+            )
+            .withColumn("key", F.expr("shiftright(ph, band * 15) & 32767"))
         )
-        .withColumn("key", F.expr("shiftright(ph, band * 15) & 32767"))
-    )
-    drained = run_to_memory(
-        phash_pair_stream(bands), "stream_phash_registry", "append"
-    )
+        drained = run_to_memory(
+            phash_pair_stream(bands), "stream_phash_registry", "append"
+        )
     hamming = F.bit_count(F.col("pa").bitwiseXOR(F.col("pb")))
     return (
         drained.distinct()  # a pair colliding in 2+ bands emits per band

@@ -24,8 +24,7 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import register
 from ..operators.sketches import N_REGISTERS, _rho
-from .candles_stream import _events_stream
-from .memory_sink import run_to_memory
+from .memory_sink import run_to_memory, table_stream
 
 _SQL_DAILY_HLL = None  # assigned below to share the ladder constant
 
@@ -72,25 +71,25 @@ def _daily_hll_oracle() -> str:
     tags=("streaming", "sketch"),
 )
 def stream_sketch_hll_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _events_stream(spark, sf_dir)
     h = F.conv(
         F.substring(F.md5(F.col("user_id").cast("string").cast("binary")), 1, 12),
         16,
         10,
     ).cast("bigint")
-    base = events.select(
-        F.datediff(F.to_date("ts"), F.lit("2000-01-01")).alias("day_idx"),
-        h.alias("h"),
-    ).select(
-        "day_idx",
-        (F.col("h") % N_REGISTERS).cast("int").alias("register"),
-        F.expr(f"h div {N_REGISTERS}").alias("w"),
-    )
-    agg = base.groupBy("day_idx", "register").agg(
-        F.max(_rho(F.col("w"))).alias("max_rho")
-    )
+    with table_stream(spark, sf_dir, "events") as events:
+        base = events.select(
+            F.datediff(F.to_date("ts"), F.lit("2000-01-01")).alias("day_idx"),
+            h.alias("h"),
+        ).select(
+            "day_idx",
+            (F.col("h") % N_REGISTERS).cast("int").alias("register"),
+            F.expr(f"h div {N_REGISTERS}").alias("w"),
+        )
+        agg = base.groupBy("day_idx", "register").agg(
+            F.max(_rho(F.col("w"))).alias("max_rho")
+        )
+        drained = run_to_memory(agg, "stream_sketch_hll_daily", "complete")
     return (
-        run_to_memory(agg, "stream_sketch_hll_daily", "complete")
-        .select(F.col("day_idx").cast("int").alias("day_idx"), "register", "max_rho")
+        drained.select(F.col("day_idx").cast("int").alias("day_idx"), "register", "max_rho")
         .orderBy("day_idx", "register")
     )

@@ -30,8 +30,8 @@ from pyspark.sql import functions as F
 from ..functions.numeric import dsum, sql_dsum
 from ..operators.sessions import GAP_SECONDS, SQL_SESSION_ISLANDS
 from ..plans.registry import register
-from .candles_stream import LATE_DATA_WATERMARK, _events_stream
-from .memory_sink import run_to_memory
+from .candles_stream import LATE_DATA_WATERMARK
+from .memory_sink import run_to_memory, table_stream
 
 
 @register(
@@ -57,21 +57,21 @@ from .memory_sink import run_to_memory
     tags=("streaming", "sessions"),
 )
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _events_stream(spark, sf_dir)
-    agg = (
-        events.withWatermark("ts", LATE_DATA_WATERMARK)
-        .groupBy(
-            "user_id",
-            F.session_window("ts", f"{GAP_SECONDS} seconds").alias("sw"),
+    with table_stream(spark, sf_dir, "events") as events:
+        agg = (
+            events.withWatermark("ts", LATE_DATA_WATERMARK)
+            .groupBy(
+                "user_id",
+                F.session_window("ts", f"{GAP_SECONDS} seconds").alias("sw"),
+            )
+            .agg(
+                F.count("*").alias("n_events"),
+                dsum("value").alias("total_value"),
+            )
         )
-        .agg(
-            F.count("*").alias("n_events"),
-            dsum("value").alias("total_value"),
-        )
-    )
+        drained = run_to_memory(agg, "stream_sessionize", "complete")
     return (
-        run_to_memory(agg, "stream_sessionize", "complete")
-        .select(
+        drained.select(
             "user_id",
             F.col("sw.start").alias("session_start"),
             F.col("sw.end").alias("session_end"),

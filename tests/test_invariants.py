@@ -874,8 +874,8 @@ def test_cdc_foreachbatch_stream_matches_batch(spark, sf_dir):
         changelog,
         merge_changelog,
     )
-    from rippled_historical_database_spark.streaming.candles_stream import (
-        _events_stream,
+    from rippled_historical_database_spark.streaming.memory_sink import (
+        table_stream,
     )
 
     base = load_table(spark, sf_dir, "customer").select(
@@ -889,16 +889,12 @@ def test_cdc_foreachbatch_stream_matches_batch(spark, sf_dir):
     state = {"df": base.collect()}
     apply_batch = make_cdc_apply_batch(spark, state)
 
-    q = (
-        _events_stream(spark, sf_dir)
-        .writeStream.outputMode("append")
-        .foreachBatch(apply_batch)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    with table_stream(spark, sf_dir, "events") as events:
+        q = events.writeStream.outputMode("append").foreachBatch(apply_batch).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     assert {(r.key, r.balance) for r in state["df"]} == one_shot
 
 

@@ -194,21 +194,60 @@ def test_exact_probe_adversarial_values(spark, tmp_path):
     assert got["edge"].m2_e6 > 0 and got["twopoint"].skew_sq_e6 is not None
 
 
-# ------------------------------- probe-tool graceful degradation
+# ------------------------------------------------------- probe tools
 
 
-def test_stage_task_extremes_degrade_without_ui(spark):
-    """The skew probes' REST task-metrics helpers must degrade to {}
-    (evidence absent, never an exception) when the session runs with
-    the harness default spark.ui.enabled=false -- and importing the
-    tools must not mutate the process env (the UI opt-in lives in
-    main(), not at module import)."""
+def test_stage_task_extremes_read_the_status_store(spark):
+    """With the session's UI off, the skew probe's per-stage task
+    durations come from the in-process status store: a shuffle query's
+    worst stage reports max >= median >= 0 ms."""
+    from pyspark.sql import functions as F
+
+    from perfbench.probes import StatusReader
+    from tools.skew_probe import settled_job_id, stage_task_extremes
+
+    assert spark.sparkContext.getConf().get("spark.ui.enabled") == "false"
+    reader = StatusReader(spark)
+    before = settled_job_id(reader)
+    spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count().collect()
+    ex = stage_task_extremes(reader, before, settled_job_id(reader))
+    assert ex, "no stage of the shuffle query finished a task"
+    assert ex["max_task_ms"] >= ex["median_task_ms"] >= 0
+    assert ex["stage"]
+
+
+def test_importing_a_tool_mutates_nothing():
+    """Importing any tools/ script (in a fresh interpreter) starts no
+    SparkContext and leaves os.environ as it was: a tool's side effects
+    live in main().  Also catches a tool whose imports no longer
+    resolve."""
+    import json
     import os
+    import subprocess
+    import sys
 
-    from tools.skew_probe import _completed_stage_ids, stage_task_extremes
-
-    assert os.environ.get("SPARK_GRAFT_UI") in (None, "false")
-    before = _completed_stage_ids(spark)
-    assert before == set()
-    spark.range(10).count()
-    assert stage_task_extremes(spark, before) == {}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import glob, importlib, json, os, sys
+sys.path.insert(0, {root!r})
+from pyspark import SparkContext
+out = {{}}
+for path in sorted(glob.glob(os.path.join({root!r}, "tools", "*.py"))):
+    name = "tools." + os.path.basename(path)[:-3]
+    env = dict(os.environ)
+    importlib.import_module(name)
+    out[name] = {{
+        "spark": SparkContext._active_spark_context is not None,
+        "env": sorted(k for k in env.keys() | os.environ.keys()
+                      if env.get(k) != os.environ.get(k)),
+    }}
+print(json.dumps(out))
+"""
+    proc = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    found = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert "tools.skew_probe" in found and "tools.cc_shuffle_bytes" in found
+    dirty = {k: v for k, v in found.items() if v["spark"] or v["env"]}
+    assert dirty == {}

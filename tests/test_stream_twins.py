@@ -8,8 +8,9 @@ slices; these cut sets add single-row chunks and seeded random cuts,
 with no streaming query (the twin's own update callable, driven with a
 FakeState over its feed collected to pandas).
 
-Feed hygiene: the runner's slice directory and the account-bucket
-twin's feed copy are deleted when the drain returns, not at exit.
+Feed hygiene: the runner's slice directory, the account-bucket twin's
+feed copy and the events / documents feed links are deleted when the
+drain returns, not at exit.
 """
 
 from __future__ import annotations
@@ -101,7 +102,9 @@ def _feed_dirs():
     tmp = tempfile.gettempdir()
     return {
         d
-        for prefix in ("rsi_closes_", "events_stateful_")
+        for prefix in (
+            "rsi_closes_", "events_stateful_", "events_stream_", "documents_stream_",
+        )
         for d in glob.glob(os.path.join(tmp, prefix + "*"))
     }
 
@@ -113,4 +116,6 @@ def test_stream_feed_dirs_are_reclaimed(spark, sf_dir):
     before = _feed_dirs()
     assert qs["stream_obv"].spark(spark, sf_dir).count() > 0
     assert qs["stream_stateful_account_buckets"].spark(spark, sf_dir).count() > 0
+    assert qs["stream_dedup_exactly_once"].spark(spark, sf_dir).count() > 0
+    assert qs["stream_document_dedup_registry"].spark(spark, sf_dir).count() > 0
     assert _feed_dirs() - before == set()

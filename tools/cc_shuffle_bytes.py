@@ -3,8 +3,9 @@
 Round-7 verdict item #7: the 100x CC wall-clock bend was diagnosed as
 host saturation via a partition-count control experiment; this makes it
 conclusive by measuring the SHUFFLE VOLUME each large-star/small-star
-round actually moves (Spark status REST API, summed completed-stage
-shuffle write bytes) at 30x and 100x.  If bytes-per-round scale
+round actually moves (the shuffle write bytes of the round's jobs,
+read from Spark's in-process status store through
+``perfbench/probes.StatusReader``) at 30x and 100x.  If bytes-per-round scale
 linearly with the corpus while wall does not, the bend is the fixed
 32-core host, not the algorithm.
 
@@ -19,61 +20,20 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench.probes import StatusReader  # noqa: E402
+from rippled_historical_database_spark.session import get_spark  # noqa: E402
+from tools.scale10x import ensure_10x  # noqa: E402
+from tools.skew_probe import settled_job_id  # noqa: E402
 
 SCALES = {10: "/tmp/sf1x", 30: "/tmp/sf3x", 100: "/tmp/sf10x"}
 
 
-def _spark_with_ui():
-    """The shared get_spark disables the UI; the REST status API needs
-    it, so this experiment builds its own session (same engine knobs)."""
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("cc-shuffle-bytes")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "5000")
-        .getOrCreate()
-    )
-
-
-def _shuffle_write_bytes(ui: str) -> int:
-    """Completed-stage shuffle-write total, read only after the status
-    store quiesces: the store is fed by the ASYNC listener bus, so a
-    read taken right after an action returns can miss that action's
-    stages (which would then mis-attribute to the next round)."""
-    def read() -> int:
-        apps = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))
-        app_id = apps[0]["id"]
-        stages = json.load(
-            urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{app_id}/stages?status=COMPLETE"
-            )
-        )
-        return sum(s.get("shuffleWriteBytes", 0) for s in stages)
-
-    prev = read()
-    for _ in range(20):
-        time.sleep(0.3)
-        cur = read()
-        if cur == prev:
-            return cur
-        prev = cur
-    return prev
-
-
 def measure(spark, sf_dir: str) -> list[dict]:
     """Drive the CC round loop over the LSH duplicate graph at sf_dir,
-    recording per-round wall + shuffle-write delta."""
+    recording per-round wall + the shuffle bytes its jobs wrote."""
     from pyspark.sql import functions as F
 
     from rippled_historical_database_spark.operators.dedup import (
@@ -84,7 +44,7 @@ def measure(spark, sf_dir: str) -> list[dict]:
         dedup_minhash_lsh_pairs,
     )
 
-    ui = spark.sparkContext.uiWebUrl
+    reader = StatusReader(spark)
     pairs = (
         dedup_minhash_lsh_pairs(spark, sf_dir)
         .filter(F.col("est_jaccard") >= CC_JACCARD_MIN)
@@ -115,16 +75,19 @@ def measure(spark, sf_dir: str) -> list[dict]:
     out = [{"round": 0, "edges": sig[0]}]
     edges = oriented
     for rnd in range(1, CC_MAX_ROUNDS + 1):
-        b0, t0 = _shuffle_write_bytes(ui), time.perf_counter()
+        before, t0 = settled_job_id(reader), time.perf_counter()
         new_edges = cc_small_star(cc_large_star(edges)).localCheckpoint(
             eager=False
         )
         new_sig = checksum(new_edges)  # the round's materializing action
         wall = time.perf_counter() - t0
+        round_jobs = reader.jobs(before, settled_job_id(reader))
+        reader.snapshot()
+        rec = reader.exec_record(round_jobs, wall, spark.sparkContext.defaultParallelism)
         out.append({
             "round": rnd,
             "wall_sec": round(wall, 2),
-            "shuffle_mb": round((_shuffle_write_bytes(ui) - b0) / 1e6, 1),
+            "shuffle_mb": round(rec["shuffle_write_bytes"] / 1e6, 1),
             "edges": new_sig[0],
         })
         edges, prev_sig, sig = new_edges, sig, new_sig
@@ -147,8 +110,7 @@ def main() -> None:
             f"usage: python tools/cc_shuffle_bytes.py [scale ...]\n"
             f"  scale must be one of: {known} (default: 30 100)"
         )
-    spark = _spark_with_ui()
-    from tools.scale10x import ensure_10x
+    spark = get_spark("cc-shuffle-bytes")
 
     for s in scales:
         sf_dir = ensure_10x(spark, out=SCALES[s], copies=s)
